@@ -96,12 +96,6 @@ def kll_quantile(sketch: Column | str, q: float) -> Column:
     )
 
 
-def kll_rank(sketch: Column | str, value: Column | float) -> Column:
-    """Estimated normalized rank of `value` in [0, 1]."""
-    v = value if isinstance(value, Column) else F.lit(float(value))
-    return _call("kll_sketch_get_rank_double", _col(sketch), v)
-
-
 def kll_n(sketch: Column | str) -> Column:
     """Exact number of values the sketch has absorbed (KLL tracks n
     losslessly — the count column every envelope check anchors on)."""

@@ -30,6 +30,8 @@ scope as the xxhash64 SimHash form (STATUS.md).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
@@ -60,9 +62,20 @@ def _word_table(docs: DataFrame, text_col: Column | str) -> DataFrame:
 
 
 def _sql_lit(s: str) -> str:
-    """Spark SQL string literal for an arbitrary symbol (the default
-    parser mode uses backslash escapes — escapedStringLiterals=false)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Spark SQL string expression for an arbitrary symbol that parses
+    the same under either spark.sql.parser.escapedStringLiterals mode:
+    no quote or backslash ever sits inside a quoted string (the modes
+    disagree on both), they are spliced in as chr(39) / chr(92). The
+    concat of literals is constant-folded, so the plan holds one
+    literal either way."""
+    parts = re.split(r"(['\\])", s)
+    if len(parts) == 1:
+        return f"'{s}'"
+    return "concat(" + ", ".join(
+        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'"
+        for p in parts
+        if p
+    ) + ")"
 
 
 def _merge_pair_sql(syms_sql: str, a: str, b: str) -> str:

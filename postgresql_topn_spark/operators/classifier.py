@@ -98,11 +98,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from postgresql_topn_spark.conf import LR_PARTITION_BYTES, knob
 from postgresql_topn_spark.functions.sketch import _col
 from postgresql_topn_spark.operators.dsir import (
     _bucket,
     hashed_ngrams,
 )
+from postgresql_topn_spark.sources.tables import input_bytes
 
 _MICRO = 1_000_000
 # |z|/1e6 is clamped here before exp(): sigmoid saturates to within
@@ -267,35 +269,16 @@ def _train_parts(train: DataFrame) -> int:
     stays the SCALE lever: any real corpus hits the cap and trains at
     cluster-sized parallelism — only toy inputs shrink, which is
     precisely the AQE-coalescing behavior an explicit repartition
-    lacks. Non-local schemes, cut/cached inputs (no scan files) and
-    stat failures all fall back to the conf count — the prior
-    behavior, and at cluster scale the right one."""
-    import os
-    from urllib.parse import urlparse
-
-    from postgresql_topn_spark.operators.dedup import _size_bytes
-
+    lacks. Cut/cached inputs (no scan files) and unknown sizes fall
+    back to the conf count — the prior behavior, and at cluster scale
+    the right one."""
     spark = train.sparkSession
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        files = train.inputFiles()
-    except Exception:
+    total = input_bytes(train)
+    if total is None:
         return cap
-    if not files:
-        return cap
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("file", ""):
-            return cap
-        try:
-            total += os.path.getsize(p.path)
-        except OSError:
-            return cap
-    per_part = _size_bytes(
-        spark.conf.get("spark.topn.lr.partitionBytes", "131072")
-    )
-    return max(1, min(cap, -(-total // max(per_part, 1))))
+    per_part = knob(spark, LR_PARTITION_BYTES)
+    return max(1, min(cap, -(-total // per_part)))
 
 
 def _sigmoid(z_micro: Column) -> Column:

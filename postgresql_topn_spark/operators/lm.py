@@ -39,8 +39,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from postgresql_topn_spark.conf import LM_SAMPLE_TARGET_BYTES, knob
 from postgresql_topn_spark.functions.sketch import _col
 from postgresql_topn_spark.operators.text import tokens
+from postgresql_topn_spark.sources.tables import input_bytes
 
 # Fixed-point scale for log-probabilities: 1e6 = micro-nat resolution,
 # leaving ~2^43 headroom before a per-doc bigint sum could overflow
@@ -237,47 +239,16 @@ def bigram_logprob_scores(
     )
 
 
-# ppl_buckets' cutoff-sample bound (r14): input bytes past which the
-# effective sample fraction shrinks proportionally. The scale lever —
-# raise it to widen the cutoff sample, never a local[32] constant.
-_SAMPLE_TARGET_CONF = "spark.topn.lm.sampleTargetBytes"
-_SAMPLE_TARGET_DEFAULT = str(1 << 30)  # 1 GiB of compressed input
-
-
 def _bounded_sample_fraction(docs: DataFrame, sample_fraction: float) -> float:
     """min(sample_fraction, sampleTargetBytes / input file bytes) —
     the code-enforced bound on ppl_buckets' single-reducer cutoff
-    sample. Local-scheme file scans only; cut/in-memory inputs,
-    remote schemes and stat failures return `sample_fraction`
-    unchanged (the spread_small_scan fallback contract)."""
-    import os
-    from urllib.parse import urlparse
-
-    from postgresql_topn_spark.operators.dedup import _size_bytes
-
-    spark = docs.sparkSession
-    try:
-        files = docs.inputFiles()
-    except Exception:
+    sample. Cut/in-memory inputs and unknown sizes return
+    `sample_fraction` unchanged (the spread_small_scan fallback
+    contract)."""
+    total = input_bytes(docs)
+    if total is None:
         return sample_fraction
-    if not files:
-        return sample_fraction
-    total = 0
-    for f in files:
-        p = urlparse(f)
-        if p.scheme not in ("file", ""):
-            return sample_fraction
-        try:
-            total += os.path.getsize(p.path)
-        except OSError:
-            return sample_fraction
-    target = _size_bytes(
-        spark.conf.get(_SAMPLE_TARGET_CONF, _SAMPLE_TARGET_DEFAULT)
-    )
-    if target <= 0:
-        raise ValueError(
-            f"{_SAMPLE_TARGET_CONF} must be a positive size, got {target}"
-        )
+    target = knob(docs.sparkSession, LM_SAMPLE_TARGET_BYTES)
     if total <= target:
         return sample_fraction
     return min(sample_fraction, target / float(total))

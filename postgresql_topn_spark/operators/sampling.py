@@ -195,9 +195,11 @@ def token_budget_mix(
     as ONE job. Values are bit-identical: ``float(long)`` in Python
     and ``cast(long as double)`` round the same way, and the rate
     arithmetic is unchanged. The frame must produce exactly one row
-    (a global aggregate does, by construction) and a non-negative
-    value — the caller's sum of non-negative sizes; the eager-float
-    validation cannot see a lazy value.
+    (a global aggregate does, by construction) holding a non-negative,
+    non-NULL value; the eager-float validation cannot see a lazy value,
+    so the plan asserts it and the job fails with that message instead
+    of silently emptying (no row) or duplicating (several rows) the
+    sample.
 
     100 TB shape: one |strata|-row hash-agg with map-side combine, the
     rates broadcast back, and the sample itself is a scan-stage filter
@@ -208,9 +210,11 @@ def token_budget_mix(
                 "a lazy budget frame must have exactly one column, got "
                 f"{budget.columns}"
             )
-        budget_src = budget.select(
-            _col(budget.columns[0]).cast("double").alias("__budget")
-        )
+        b = _col(budget.columns[0]).cast("double")
+        one = budget.agg(F.count(F.lit(1)).alias("__n"), F.max(b).alias("__b"))
+        ok = (F.col("__n") == 1) & (F.col("__b") >= 0)  # NULL fails too
+        msg = "a lazy budget frame must produce exactly one row holding a non-negative, non-NULL budget"
+        budget_src = one.select(F.coalesce(F.assert_true(ok, msg), "__b").alias("__budget"))
         budget_expr: Column = F.col("__budget")
     else:
         if budget < 0:

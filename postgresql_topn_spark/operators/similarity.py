@@ -365,27 +365,6 @@ def np_lsh_buckets(
     return _buckets(_col(vec))
 
 
-def np_cosine(a: Column | str, b: Column | str) -> Column:
-    """Batched exact cosine (numpy einsum over Arrow batches) for the
-    rerank stage of approximate ops. Differs from the fold-based
-    `cosine` only in float summation order (~1 ulp); oracled queries
-    that must hash-match DuckDB's sequential list_reduce keep `cosine`."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype=float)
-        A = np.asarray(xs.tolist(), dtype=np.float64)
-        B = np.asarray(ys.tolist(), dtype=np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        return pd.Series(num / den)
-
-    return _cos(_col(a), _col(b))
-
-
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,

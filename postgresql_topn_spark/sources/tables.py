@@ -8,8 +8,12 @@ reference relies on PostgreSQL for the same (SURVEY.md §2.2).
 
 from __future__ import annotations
 
+import functools
 import os
+from urllib.parse import urlparse
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
@@ -20,21 +24,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 # Per-session DataFrame cache. The fixture tables are immutable, so the
 # only staleness risk is a stopped SparkSession — hence the cache is
@@ -88,13 +77,52 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+@functools.lru_cache(maxsize=None)
+def _jclass(jvm, name: str):
+    # py4j resolves a dotted class name in ~0.8 ms of round trips
+    return functools.reduce(getattr, name.split("."), jvm)
 
 
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+def input_bytes(
+    source: "DataFrame | str | list[str]", spark: SparkSession | None = None
+) -> int | None:
+    """How big an input is: the bytes of a DataFrame's scan files (or of
+    a list of file URIs), or of everything under a path. None when
+    unknown — no file scan behind the frame (in-memory, cut, cached) or
+    an unreadable file — and each caller keeps its scale-safe fallback.
+
+    Sizes are read through the Hadoop FileSystem API, so any scheme
+    works. A local ``file:`` URI takes an os.stat shortcut (the same
+    bytes, no py4j round trip); one os.stat cannot resolve (a
+    percent-encoded name) goes through Hadoop too."""
+    if isinstance(source, DataFrame):
+        spark = source.sparkSession
+        try:
+            source = source.inputFiles()
+        except (Py4JError, PySparkException):  # no analyzable scan
+            return None
+    spark = spark or SparkSession.active()
+    Path = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")
+    try:
+        if isinstance(source, str):
+            path = Path(source)
+            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+            return int(fs.getContentSummary(path).getLength())
+        total = 0
+        for name in source:
+            uri = urlparse(name)
+            try:
+                if uri.scheme in ("file", ""):
+                    total += os.path.getsize(uri.path)
+                    continue
+            except OSError:
+                pass
+            path = Path(_jclass(spark._jvm, "java.net.URI")(name))
+            fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+            total += int(fs.getFileStatus(path).getLen())
+        return total if source else None
+    except (Py4JError, PySparkException):  # unreadable file or path
+        return None
 
 
 # The reference's flagship CSV schema — 12-column Amazon customer reviews

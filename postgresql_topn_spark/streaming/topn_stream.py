@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from postgresql_topn_spark.conf import resolve_counters
+from postgresql_topn_spark.conf import STREAM_PARTITION_BYTES, knob, resolve_counters
 from postgresql_topn_spark.functions.sketch import _col
 from postgresql_topn_spark.operators.sketch_state import (
     TopnState,
@@ -45,6 +45,7 @@ from postgresql_topn_spark.operators.sketch_state import (
     truncate_key_bytes,
     weight_to_long,
 )
+from postgresql_topn_spark.sources.tables import input_bytes
 
 
 def topn_streaming_state(
@@ -161,10 +162,6 @@ def _run_id(checkpoint: "str | None") -> str:
     return uuid.uuid4().hex[:12]
 
 
-_STATE_PARTITION_BYTES_CONF = "spark.topn.stream.partitionBytes"
-_STATE_PARTITION_BYTES_DEFAULT = 1 << 20  # 1 MiB of source per partition
-
-
 def adaptive_stream_partitions(spark: SparkSession, source_path: str) -> int:
     """Scale-adaptive ``spark.sql.shuffle.partitions`` for a streaming
     query draining a finite staged source (availableNow backfills —
@@ -199,24 +196,10 @@ def adaptive_stream_partitions(spark: SparkSession, source_path: str) -> int:
     the session is untouched.
     """
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    try:
-        bpp = int(
-            spark.conf.get(
-                _STATE_PARTITION_BYTES_CONF,
-                str(_STATE_PARTITION_BYTES_DEFAULT),
-            )
-        )
-    except ValueError:
-        bpp = _STATE_PARTITION_BYTES_DEFAULT
-    if bpp <= 0:
-        bpp = _STATE_PARTITION_BYTES_DEFAULT
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(source_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    try:
-        nbytes = int(fs.getContentSummary(jpath).getLength())
-    except Exception:  # noqa: BLE001 — unreadable/missing source:
-        return cap  # size unknown, keep the configured parallelism
+    bpp = knob(spark, STREAM_PARTITION_BYTES)
+    nbytes = input_bytes(source_path, spark)
+    if nbytes is None:  # unreadable/missing source: size unknown,
+        return cap  # keep the configured parallelism
     return max(1, min(cap, -(-nbytes // bpp)))
 
 

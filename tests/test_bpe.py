@@ -253,3 +253,27 @@ def test_merge_sql_escapes_quote_and_backslash_symbols(spark):
         ("a", "'b</w>"),
         ("\\", "c"),
     ]
+
+
+def test_merges_equal_under_both_string_literal_modes(spark):
+    """spark.sql.parser.escapedStringLiterals reads `'it''s'` and
+    `'it\\'s'` differently; the merge SQL splices quote and backslash
+    in as chr(39)/chr(92), so symbols holding either learn the same
+    merges in both parser modes."""
+    from postgresql_topn_spark.operators.bpe import train_bpe
+
+    df = spark.createDataFrame(
+        [(1, "it's it's a\\b a\\b a\\b '\\' '\\'"), (2, "it's \\\\ \\\\")],
+        "doc_id bigint, text string",
+    )
+    key = "spark.sql.parser.escapedStringLiterals"
+    merges = {}
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            merges[mode] = train_bpe(df, "text", n_merges=8, min_pair_count=1)
+    finally:
+        spark.conf.unset(key)
+    assert merges["false"] == merges["true"]
+    symbols = {s for pair in merges["false"] for s in pair}
+    assert any("'" in s for s in symbols) and any("\\" in s for s in symbols)

@@ -260,10 +260,8 @@ class TestSampleBound:
     instead of living only in the docstring."""
 
     def test_derivation_clamps_and_falls_back(self, spark, tmp_path):
-        from postgresql_topn_spark.operators.lm import (
-            _SAMPLE_TARGET_CONF,
-            _bounded_sample_fraction,
-        )
+        from postgresql_topn_spark.conf import LM_SAMPLE_TARGET_BYTES as _SAMPLE_TARGET_CONF
+        from postgresql_topn_spark.operators.lm import _bounded_sample_fraction
 
         docs = spark.createDataFrame(
             [(i, "a b c") for i in range(50)], "doc_id long, text string"
@@ -301,11 +299,40 @@ class TestSampleBound:
         finally:
             spark.conf.unset(_SAMPLE_TARGET_CONF)
 
-    def test_bound_engages_end_to_end(self, spark, tmp_path):
-        from postgresql_topn_spark.operators.lm import (
-            _SAMPLE_TARGET_CONF,
-            ppl_buckets,
+    def test_bound_engages_without_os_stat(self, spark, tmp_path, monkeypatch):
+        """The scan is sized through the Hadoop FileSystem API, so the
+        bound holds where os.stat cannot see the files (hdfs:, s3a:).
+        Before input_bytes, a failed stat left the fraction unchanged."""
+        import os
+
+        from postgresql_topn_spark.conf import LM_SAMPLE_TARGET_BYTES as _SAMPLE_TARGET_CONF
+        from postgresql_topn_spark.operators.lm import _bounded_sample_fraction
+
+        path = str(tmp_path / "docs.parquet")
+        spark.range(200).selectExpr("id AS doc_id", "'a b c' AS text").write.parquet(
+            path
         )
+        scan = spark.read.parquet(path)
+        total = sum(
+            os.path.getsize(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+
+        def no_stat(p):
+            raise OSError("no local stat")
+
+        monkeypatch.setattr(os.path, "getsize", no_stat)
+        spark.conf.set(_SAMPLE_TARGET_CONF, str(total // 4))
+        try:
+            eff = _bounded_sample_fraction(scan, 1.0)
+        finally:
+            spark.conf.unset(_SAMPLE_TARGET_CONF)
+        assert eff == pytest.approx((total // 4) / float(total))
+
+    def test_bound_engages_end_to_end(self, spark, tmp_path):
+        from postgresql_topn_spark.conf import LM_SAMPLE_TARGET_BYTES as _SAMPLE_TARGET_CONF
+        from postgresql_topn_spark.operators.lm import ppl_buckets
 
         docs = spark.createDataFrame(
             [(i, f"tok{i % 7} tok{i % 3} x") for i in range(60)],

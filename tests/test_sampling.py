@@ -1,5 +1,7 @@
 """Deterministic sampling invariants."""
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from postgresql_topn_spark.operators.sampling import (
@@ -570,3 +572,32 @@ def test_token_budget_lazy_budget_equals_eager(spark):
             df, "lang", "doc_id", "n_tok",
             budget=df.agg(F.sum("n_tok"), F.count("*")), **kw,
         )
+
+
+@pytest.mark.parametrize(
+    "budget_sql",
+    [
+        "SELECT CAST(100 AS DOUBLE) AS b WHERE false",  # no row
+        "SELECT CAST(100 AS DOUBLE) AS b FROM range(2)",  # two rows
+        "SELECT CAST(-1 AS DOUBLE) AS b",  # negative
+        "SELECT CAST(NULL AS DOUBLE) AS b",  # NULL
+    ],
+    ids=["zero_rows", "two_rows", "negative", "null"],
+)
+def test_token_budget_lazy_budget_contract_enforced(spark, budget_sql):
+    """The eager path raises on a bad budget; the lazy frame's contract
+    (exactly one row, non-negative, not NULL) is asserted inside the
+    plan, so a bad frame fails the job instead of silently emptying
+    (no row) or duplicating (two rows) the sample."""
+    from postgresql_topn_spark.operators.sampling import token_budget_mix
+
+    df = spark.createDataFrame(
+        [(i, ["en", "de"][i % 2], 10) for i in range(40)],
+        "doc_id long, lang string, n_tok long",
+    )
+    out = token_budget_mix(
+        df, "lang", "doc_id", "n_tok",
+        budget=spark.sql(budget_sql), weights={"en": 0.5, "de": 0.5},
+    )
+    with pytest.raises(Exception, match="lazy budget frame must produce"):
+        out.collect()

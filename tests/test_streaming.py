@@ -986,8 +986,10 @@ def test_adaptive_stream_partitions_scales_with_source_bytes(
     cap and keep the session conf as the scale lever; an unreadable
     source falls back to the cap (never under-parallelize on a stat
     error)."""
+    from postgresql_topn_spark.conf import (
+        STREAM_PARTITION_BYTES as _STATE_PARTITION_BYTES_CONF,
+    )
     from postgresql_topn_spark.streaming.topn_stream import (
-        _STATE_PARTITION_BYTES_CONF,
         adaptive_stream_partitions,
     )
 
@@ -1008,7 +1010,9 @@ def test_adaptive_stream_partitions_scales_with_source_bytes(
         # one partition floor for a sub-threshold source
         assert adaptive_stream_partitions(spark, str(src)) == 1
         spark.conf.set(_STATE_PARTITION_BYTES_CONF, "not-a-number")
-        assert 1 <= adaptive_stream_partitions(spark, str(src)) <= int(cap)
+        with pytest.raises(ValueError, match=_STATE_PARTITION_BYTES_CONF):
+            adaptive_stream_partitions(spark, str(src))
+        spark.conf.set(_STATE_PARTITION_BYTES_CONF, "2000")
         # missing path: size unknown -> keep configured parallelism
         assert adaptive_stream_partitions(
             spark, str(tmp_path / "missing")
