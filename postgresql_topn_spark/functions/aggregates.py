@@ -1,22 +1,33 @@
-"""Aggregate surface — ``topn_add_agg`` / ``topn_union_agg`` and the
-window-frame merge, Tier-1 composition path.
+"""Aggregate surface — ``topn_add_agg`` / ``topn_weighted_agg`` /
+``topn_union_agg`` and the window-frame merge, Tier-1 composition path.
 
-Everything here is built from native groupBy / window / higher-order-map
-expressions, so Catalyst supplies partial aggregation (the reference's
-serialize/combine parallel-agg plumbing, topn.c:509-625, is free), spill,
-AQE and codegen. Results are exact whenever distinct items per group stay
+Each Tier-1 aggregate is written once, as SQL text: the ``*_sql``
+builders below emit its count -> rank -> pack plan over a named source,
+and both surfaces run that text. ``sql_api.topn_sql`` splices a user's
+statement into it. The Column-API functions project the caller's
+columns to internal names (``__g{i}`` plus the item, weight or sketch),
+run the text through ``spark.sql(text, src=projected)`` — PySpark's
+DataFrame-parameterised ``sql``, which registers a per-call temp view
+under a uuid name, so concurrent builds never share a view — and
+restore the caller-facing names on the result. Caller names never
+enter the SQL text.
+
+The plan is native groupBy / window / higher-order-map expressions, so
+Catalyst supplies partial aggregation (the reference's serialize/
+combine parallel-agg plumbing, topn.c:509-625, is free), spill, AQE and
+codegen. Results are exact whenever distinct items per group stay
 within the counter budget — exactly the regime where the reference is
 also exact (SURVEY.md §1.2). For strictly-bounded-memory semantics under
 huge per-group cardinality use operators/sketch_state.py (Tier 2).
 
 Scale notes (100 TB design):
-- `topn_add_agg` shuffles once on (keys, item) for the exact per-item
-  count (map-side partial combine collapses duplicate items before the
+- The count shuffles once on (keys, item) for the exact per-item count
+  (map-side partial combine collapses duplicate items before the
   exchange — for skewed heavy-hitter data this is a massive reduction),
-  then once on (keys) for the window rank; the final groupBy(keys)
+  then once on (keys) for the window rank; the final GROUP BY keys
   reuses the window's hash partitioning, so no third exchange.
 - Sketch size is bounded (<= counters entries, default 1000) before any
-  `collect_list`, so per-group state in the final aggregation is small
+  ``collect_list``, so per-group state in the final aggregation is small
   and bounded regardless of input cardinality.
 """
 
@@ -24,11 +35,20 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, SparkSession, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BooleanType,
+    ByteType,
+    DateType,
+    IntegerType,
+    LongType,
+    ShortType,
+)
 
 from postgresql_topn_spark.conf import INT64_MAX, resolve_counters
 from postgresql_topn_spark.functions.sketch import (
+    ENTRY_CMP_SQL,
     _col,
     empty_sketch,
     merge_sketches,
@@ -36,104 +56,345 @@ from postgresql_topn_spark.functions.sketch import (
     prune_sketch,
 )
 
-_ITEM, _FREQ, _RN = "__topn_item", "__topn_freq", "__topn_rn"
+# Item types whose string cast is injective: the count groups on the RAW
+# value and casts once per distinct group afterwards, so the count
+# shuffle carries fixed-width keys and the cast runs per group, not per
+# row. Strings must normalize before grouping (255-byte truncation can
+# merge items).
+_RAW_KEY_TYPES = (ByteType, ShortType, IntegerType, LongType, DateType, BooleanType)
+
+# Saturating int64 total of the per-row int64 weights __w: an exact
+# decimal(38,0) sum (cannot overflow below ~10^19 addends of int64
+# magnitude) clamped to the int64 range in BOTH directions — a negative
+# overflow saturates at INT64_MIN, never at +INT64_MAX (the top heavy
+# hitter slot), and a transient mixed-sign overflow whose exact total
+# fits int64 stays exact, so the result is independent of aggregation
+# order. A NULL-item group row carries 0: it exists only as the
+# keep-the-group marker and must not take a rank slot from a real item.
+_SATURATING_SUM_SQL = (
+    "CASE WHEN __k IS NULL THEN 0 ELSE cast(least(greatest("
+    "sum(cast(__w as decimal(38,0))), "
+    f"cast({-INT64_MAX - 1} as decimal(38,0))), "
+    f"cast({INT64_MAX} as decimal(38,0))) as bigint) END"
+)
 
 
-def _restore_group_names(
-    out: DataFrame, df: DataFrame, group_cols: Sequence[Column | str]
-) -> DataFrame:
-    """Rename the internal __gN group columns back to caller-facing
-    names. String cols need no lookup; Column expressions are resolved
-    in ONE batched select (one analysis round-trip, not one per col)."""
-    col_objs = [_col(c) for c in group_cols if not isinstance(c, str)]
-    resolved = iter(df.select(*col_objs).columns if col_objs else ())
-    for i, c in enumerate(group_cols):
-        name = c if isinstance(c, str) else next(resolved)
-        out = out.withColumnRenamed(f"__g{i}", name)
-    return out
+def _sql_ident_pairs(
+    group_by: "Sequence[str | tuple[str, str]]",
+) -> list[tuple[str, str]]:
+    return [(g, g) if isinstance(g, str) else (g[0], g[1]) for g in group_by]
 
 
-def _pack_entries_agg(drop_nonpositive: bool = True) -> Column:
-    """Final per-group packing: collect the (bounded) surviving entries
-    into a map, dropping the group-preserving NULL marker rows. Entries
-    are pre-sorted (frequency DESC, item ASC) so the map's entry order —
-    and therefore its JSON rendering — is deterministic. Empty groups
-    (all-NULL items / all-NULL sketches) become ``{}`` like the
-    reference's finalizer on a never-initialized state (topn.c:655-661,
-    expected/null_tests.out:35-40). One expr-string parse: the Column-API
-    form of this tree cost ~60ms of py4j round-trips per query build.
+def _truncate_sql(s: str, limit: int = 255) -> str:
+    """SQL-text twin of sketch._byte_truncate (same exact
+    longest-fitting-prefix computation via the monotone filter count)."""
+    k = (
+        f"size(filter(sequence(1, greatest(least(char_length({s}), {limit}), 1)), "
+        f"k -> octet_length(substring({s}, 1, k)) <= {limit}))"
+    )
+    return f"substring({s}, 1, {k})"
+
+
+def _normalize_sql(item: str) -> str:
+    """SQL-text twin of sketch.normalize_item (TEXT intake + byte cap).
+    *item* should be a cheap expression (it is repeated in the text)."""
+    s = f"cast(({item}) as string)"
+    return (
+        f"CASE WHEN octet_length({s}) <= 255 THEN {s} "
+        f"ELSE {_truncate_sql(s)} END"
+    )
+
+
+def _weight_sql(weight: str) -> str:
+    """Per-row int64 weight. An INTEGRAL weight (byte/short/int/long/
+    boolean) casts exactly — the typeof test folds at analysis, so the
+    plan keeps one branch and a bigint weight of 2^53+1 never passes
+    through double. Any other weight rounds half-up to int64, saturating
+    at the int64 bounds (no ANSI crash on out-of-range weights); NULL
+    and NaN contribute 0 (NaN would otherwise sail through try_cast to
+    the saturation branch, where NaN > 0 is TRUE). *weight* should be a
+    cheap expression (it is repeated in the text)."""
+    wd = f"cast(({weight}) as double)"
+    return (
+        f"CASE WHEN typeof({weight}) IN "
+        "('tinyint', 'smallint', 'int', 'bigint', 'boolean') "
+        f"THEN coalesce(cast(({weight}) as bigint), 0) "
+        f"WHEN {wd} IS NULL OR isnan({wd}) THEN 0 "
+        f"ELSE coalesce(try_cast(round({wd}, 0) as bigint), "
+        f"CASE WHEN round({wd}, 0) > 0 THEN {INT64_MAX} "
+        f"ELSE {-INT64_MAX - 1} END) END"
+    )
+
+
+def _count_sql(
+    source: str,
+    pairs: list[tuple[str, str]],
+    key: str,
+    weight: str | None = None,
+    *,
+    raw: bool = False,
+    where: str | None = None,
+) -> str:
+    """Count stage: one row (group keys, __i, __f) per distinct item.
+    *key* is the row-level item expression; the projection is its own
+    subquery, so a costly key (the byte cap) is evaluated once per row.
+    *weight* is the row-level int64 weight (saturating sum) or None
+    (row count; count skips NULLs, so a NULL-item group row survives
+    with 0). *raw* groups on the key as is and casts it to string per
+    group afterwards (the rank still orders by the string)."""
+    sel = "".join(f"{e} AS {a}, " for a, e in pairs)
+    names = "".join(f"{a}, " for a, _ in pairs)
+    w = f", {weight} AS __w" if weight else ""
+    wtext = f" WHERE {where}" if where else ""
+    item = "cast(__k as string)" if raw else "__k"
+    freq = _SATURATING_SUM_SQL if weight else "count(__k)"
+    return (
+        f"SELECT {names}{item} AS __i, {freq} AS __f FROM ("
+        f"SELECT {sel}{key} AS __k{w} FROM {source}{wtext}) "
+        f"GROUP BY {names}__k"
+    )
+
+
+def _rank_pack_sql(
+    counted: str,
+    names: Sequence[str],
+    counters: int,
+    out_col: str,
+    salt_buckets: int | None = None,
+    drop_nonpositive: bool = True,
+) -> str:
+    """The rank + pack tail of every Tier-1 aggregate: window-rank the
+    per-(group, item) frequencies of *counted*, keep the top *counters*
+    per group by (frequency DESC, item ASC), pack them into the sketch.
+
+    NULL-item marker rows keep otherwise-empty groups alive (reference:
+    an all-NULL group still yields ``{}``, topn.c:655-661,
+    expected/null_tests.out:35-40); real entries — whatever their sign —
+    obey the rank prune. The pack sorts entries so the map's entry order,
+    and therefore its JSON rendering, is deterministic.
+
+    *salt_buckets* enables a lossless two-level rank for skewed groups:
+    first keep the top *counters* within (group, hash(item) % salt)
+    sub-buckets, then run the per-group rank over the survivors. Any item
+    in a group's true top-N is also in its sub-bucket's top-N (the
+    sub-bucket holds a subset of its competitors), so the pre-filter
+    drops no winners — but the final per-group sort handles at most
+    salt_buckets x counters rows instead of every distinct item of a hot
+    group on a single reducer. Use when groups can have millions of
+    distinct items (100 TB regime); leave None for the two-exchange plan.
 
     ``drop_nonpositive`` applies the counting/weighted drop rule (a
     non-positive total is not a heavy hitter). The UNION path passes
     False: the reference's MergeTopn keeps whatever frequencies the
     input sketches carry (zero/negative entries are producible via
     sketch_from_json), matching the scalar topn_union."""
-    from postgresql_topn_spark.functions.sketch import ENTRY_CMP_SQL
+    keys = ", ".join(names)
+    prefix = f"{keys}, " if names else ""
 
-    cond = f"{_ITEM} IS NOT NULL"
-    if drop_nonpositive:
-        cond = f"{_FREQ} > 0 AND " + cond
-    return F.expr(
-        "map_from_entries(coalesce(array_sort(collect_list("
-        f"CASE WHEN {cond} "
-        f"THEN named_struct('item', {_ITEM}, 'frequency', {_FREQ}) END), "
+    def prune(rows: str, part: Sequence[str]) -> str:
+        over = f"PARTITION BY {', '.join(part)} " if part else ""
+        return (
+            f"SELECT {prefix}__i, __f FROM (SELECT {prefix}__i, __f, "
+            f"row_number() OVER ({over}ORDER BY __f DESC, __i ASC NULLS LAST) "
+            f"AS __rn FROM ({rows})) WHERE __rn <= {counters} OR __i IS NULL"
+        )
+
+    if salt_buckets and salt_buckets > 1:
+        salt = f"pmod(xxhash64(coalesce(__i, '')), {salt_buckets})"
+        counted = prune(counted, [*names, salt])
+    keep = "__f > 0 AND __i IS NOT NULL" if drop_nonpositive else "__i IS NOT NULL"
+    return (
+        f"SELECT {prefix}map_from_entries(coalesce(array_sort(collect_list("
+        f"CASE WHEN {keep} THEN named_struct('item', __i, 'frequency', __f) END), "
         f"{ENTRY_CMP_SQL}), "
-        "cast(array() as array<struct<item:string,frequency:bigint>>)))"
+        "cast(array() as array<struct<item:string,frequency:bigint>>))) "
+        f"AS {out_col} FROM ({prune(counted, names)})"
+        + (f" GROUP BY {keys}" if names else "")
     )
 
 
-def _rank_and_pack(
-    counted: DataFrame,
-    group_cols: Sequence[str],
+def _item_agg_sql(
+    source: str,
+    group_by: "Sequence[str | tuple[str, str]]",
+    item: str,
+    weight: str | None,
+    *,
     counters: int,
     out_col: str,
-    salt_buckets: int | None = None,
-    drop_nonpositive: bool = True,
-) -> DataFrame:
-    """Shared tail of both aggregates: window-rank the per-(group,item)
-    counts, keep the top *counters* per group, re-group into a map.
+    salt_buckets: int | None,
+    where: str | None = None,
+    raw: bool = False,
+) -> str:
+    """The counting (*weight* None) or weighted aggregate over *item*;
+    *raw* skips the TEXT-intake byte cap for raw-key item types."""
+    pairs = _sql_ident_pairs(group_by)
+    key = item if raw else _normalize_sql(item)
+    w = None if weight is None else _weight_sql(weight)
+    counted = _count_sql(source, pairs, key, w, raw=raw, where=where)
+    return _rank_pack_sql(
+        counted, [a for a, _ in pairs], counters, out_col, salt_buckets
+    )
 
-    *salt_buckets* enables a lossless two-level rank for skewed groups:
-    first keep the top *counters* within (group, hash(item) % salt)
-    sub-buckets, then run the global per-group rank over the survivors.
-    Any item in a group's true top-N is also in its sub-bucket's top-N
-    (the sub-bucket holds a subset of its competitors), so the
-    pre-filter drops no winners — but the final per-group sort handles
-    at most salt_buckets x counters rows instead of every distinct item
-    of a hot group on a single reducer. Use when groups can have
-    millions of distinct items (100 TB regime); leave None for the
-    default two-exchange plan."""
-    # rank expressions as single-parse expr strings (same plan as the
-    # Window-API form; a fraction of the construction round-trips)
-    order_sql = f"ORDER BY {_FREQ} DESC, {_ITEM} ASC NULLS LAST"
-    if salt_buckets and salt_buckets > 1:
-        salt_part = ", ".join(
-            list(group_cols)
-            + [f"pmod(xxhash64(coalesce({_ITEM}, '')), {salt_buckets})"]
-        )
-        counted = (
-            counted.withColumn(
-                _RN,
-                F.expr(
-                    f"row_number() OVER (PARTITION BY {salt_part} {order_sql})"
-                ),
-            )
-            .where((F.col(_RN) <= counters) | F.col(_ITEM).isNull())
-            .drop(_RN)
-        )
-    part_sql = (
-        f"PARTITION BY {', '.join(group_cols)} " if group_cols else ""
+
+def topn_add_agg_sql(
+    source: str,
+    group_by: "Sequence[str | tuple[str, str]]",
+    item: str,
+    *,
+    counters: int | None = None,
+    out_col: str = "topn",
+    salt_buckets: int | None = None,
+    spark: SparkSession | None = None,
+    where: str | None = None,
+) -> str:
+    """SQL text for ``SELECT keys, topn_add_agg(item) … GROUP BY keys``
+    over the table, view or FROM-clause text *source*: a pure-built-in
+    two-phase plan (no Python stages, map-side partial combine on the
+    count — the reference's parallel aggregate, topn.c:509-625,
+    expressed in Catalyst).
+
+    *group_by* entries are either column names or ``(alias, sql_expr)``
+    pairs; *item* is any SQL expression (kept cheap — it is repeated).
+    NULL items are skipped but all-NULL groups yield ``{}``; TEXT intake
+    with 255-byte cap; prune to *counters* by (frequency DESC, item
+    ASC). ``salt_buckets`` adds the lossless two-level rank for groups
+    with millions of distinct items (see ``_rank_pack_sql``). *where*
+    filters raw rows before the count (the original query's WHERE)."""
+    return _item_agg_sql(
+        source,
+        group_by,
+        item,
+        None,
+        counters=resolve_counters(counters, spark),
+        out_col=out_col,
+        salt_buckets=salt_buckets,
+        where=where,
     )
-    ranked = counted.withColumn(
-        _RN, F.expr(f"row_number() OVER ({part_sql}{order_sql})")
+
+
+def topn_weighted_agg_sql(
+    source: str,
+    group_by: "Sequence[str | tuple[str, str]]",
+    item: str,
+    weight: str,
+    *,
+    counters: int | None = None,
+    out_col: str = "topn",
+    salt_buckets: int | None = None,
+    spark: SparkSession | None = None,
+    where: str | None = None,
+) -> str:
+    """SQL text for ``SELECT keys, topn_weighted_agg(item, weight) …
+    GROUP BY keys`` as the two-phase built-in plan (arguments as
+    :func:`topn_add_agg_sql`; *weight* is kept cheap too). NULL items
+    are skipped (all-NULL groups yield ``{}``); per-row weights follow
+    ``_weight_sql`` (integral weights exact over the full int64 range,
+    others rounded half-up with sign saturation, NULL/NaN 0); the exact
+    sum is clamped to the int64 range and items whose total is <= 0 are
+    dropped."""
+    return _item_agg_sql(
+        source,
+        group_by,
+        item,
+        weight,
+        counters=resolve_counters(counters, spark),
+        out_col=out_col,
+        salt_buckets=salt_buckets,
+        where=where,
     )
-    # NULL-item marker rows keep otherwise-empty groups alive
-    # (reference: all-NULL group still yields a {} sketch); real entries
-    # — whatever their sign — obey the rank prune.
-    kept = ranked.where((F.col(_RN) <= counters) | F.col(_ITEM).isNull())
-    return kept.groupBy(*group_cols).agg(
-        _pack_entries_agg(drop_nonpositive).alias(out_col)
+
+
+def topn_union_agg_sql(
+    source: str,
+    group_by: "Sequence[str | tuple[str, str]]",
+    sketch_col: str,
+    *,
+    counters: int | None = None,
+    out_col: str = "topn",
+    salt_buckets: int | None = None,
+    spark: SparkSession | None = None,
+    where: str | None = None,
+) -> str:
+    """SQL text for ``SELECT keys, topn_union_agg(sketch) … GROUP BY``
+    as a pure-built-in two-phase plan: explode the (bounded, <= counters
+    entries) stored sketches, sum per item with map-side partial
+    combine, rank, re-pack. Frequencies sum exactly and saturate at the
+    int64 bounds like the reference (topn.c:997-1009) instead of erroring
+    under ANSI mode; NULL map values contribute 0. NULL / empty sketches
+    keep their group alive with ``{}`` (LATERAL VIEW OUTER). Frequencies
+    are kept as the sketches carry them, zero and negative included.
+    *where* filters source rows before the explode; ``salt_buckets`` as
+    for :func:`topn_add_agg_sql`."""
+    pairs = _sql_ident_pairs(group_by)
+    counted = _count_sql(
+        f"{source} LATERAL VIEW OUTER explode({sketch_col}) __t AS __i, __fr",
+        pairs,
+        "__t.__i",
+        "coalesce(__t.__fr, 0)",
+        where=where,
     )
+    return _rank_pack_sql(
+        counted,
+        [a for a, _ in pairs],
+        resolve_counters(counters, spark),
+        out_col,
+        salt_buckets,
+        drop_nonpositive=False,
+    )
+
+
+def _run(
+    df: DataFrame,
+    group_cols: Sequence[Column | str],
+    src: DataFrame,
+    text: str,
+    out_col: str,
+) -> DataFrame:
+    """Run builder *text* (reading ``{src}``) over the projected *src* and
+    restore the caller-facing names: string group cols name themselves;
+    Column expressions are resolved in ONE batched select (one analysis
+    round-trip, not one per col)."""
+    out = df.sparkSession.sql(text, src=src)
+    col_objs = [_col(c) for c in group_cols if not isinstance(c, str)]
+    resolved = iter(df.select(*col_objs).columns if col_objs else ())
+    names = [c if isinstance(c, str) else next(resolved) for c in group_cols]
+    return out.toDF(*names, out_col)
+
+
+def _project(
+    df: DataFrame, group_cols: Sequence[Column | str], *cols: Column
+) -> DataFrame:
+    """The caller's group columns as ``__g{i}``, then *cols*."""
+    return df.select(
+        *[_col(c).alias(f"__g{i}") for i, c in enumerate(group_cols)], *cols
+    )
+
+
+def _item_agg(
+    df: DataFrame,
+    group_cols: Sequence[Column | str],
+    item: Column | str,
+    weight: Column | str | None,
+    counters: int | None,
+    out_col: str,
+    salt_buckets: int | None,
+) -> DataFrame:
+    """Column-API form of :func:`_item_agg_sql`: items of a raw-key type
+    group on their raw value."""
+    counters = resolve_counters(counters, df.sparkSession)
+    extra = [] if weight is None else [_col(weight).alias("__wt")]
+    src = _project(df, group_cols, _col(item).alias("__it"), *extra)
+    text = _item_agg_sql(
+        "{src}",
+        [f"__g{i}" for i in range(len(group_cols))],
+        "__it",
+        None if weight is None else "__wt",
+        counters=counters,
+        out_col="topn",
+        salt_buckets=salt_buckets,
+        raw=isinstance(src.schema["__it"].dataType, _RAW_KEY_TYPES),
+    )
+    return _run(df, group_cols, src, text, out_col)
 
 
 def topn_add_agg(
@@ -154,49 +415,7 @@ def topn_add_agg(
     Items are cast to string and byte-capped on entry (TEXT-only intake).
     Exact counts (no eviction) — Tier-1 contract.
     """
-    counters = resolve_counters(counters, df.sparkSession)
-    gcols = [_col(c).alias(f"__g{i}") for i, c in enumerate(group_cols)]
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    # TEXT-only intake, but WHERE the cast happens is a plan choice:
-    # for types whose string cast is injective (integrals, date, bool)
-    # group on the RAW value and cast per distinct group afterwards —
-    # the count shuffle then carries fixed-width keys instead of
-    # strings and the cast runs once per group, not once per row. The
-    # rank still orders by the post-cast STRING (tie order must match
-    # the string item ordering). Strings themselves must normalize
-    # before grouping (255-byte truncation can merge items).
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        IntegerType,
-        LongType,
-        ShortType,
-    )
-
-    raw = _col(item)
-    if isinstance(item, str) and item in df.columns:
-        dtype = df.schema[item].dataType  # no extra analysis round-trip
-    else:
-        dtype = df.select(raw).schema[0].dataType
-    if isinstance(
-        dtype, (ByteType, ShortType, IntegerType, LongType, DateType, BooleanType)
-    ):
-        counted = (
-            df.select(*gcols, raw.alias(_ITEM))
-            .groupBy(*gnames, _ITEM)
-            # count(col) skips NULLs: a NULL-item group row survives with 0.
-            .agg(F.count(F.col(_ITEM)).alias(_FREQ))
-            .withColumn(_ITEM, F.col(_ITEM).cast("string"))
-        )
-    else:
-        counted = (
-            df.select(*gcols, normalize_item(item).alias(_ITEM))
-            .groupBy(*gnames, _ITEM)
-            .agg(F.count(F.col(_ITEM)).alias(_FREQ))
-        )
-    out = _rank_and_pack(counted, gnames, counters, out_col, salt_buckets)
-    return _restore_group_names(out, df, group_cols)
+    return _item_agg(df, group_cols, item, None, counters, out_col, salt_buckets)
 
 
 def topn_weighted_agg(
@@ -231,93 +450,7 @@ def topn_weighted_agg(
     are dropped from the sketch (a zero-weight item is not a heavy
     hitter). Same two-exchange plan + optional lossless salted rank as
     topn_add_agg."""
-    from pyspark.sql.types import (
-        BooleanType as _B,
-        ByteType as _Y,
-        IntegerType as _I,
-        LongType as _L,
-        ShortType as _S,
-    )
-
-    counters = resolve_counters(counters, df.sparkSession)
-    gcols = [_col(c).alias(f"__g{i}") for i, c in enumerate(group_cols)]
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    wraw = _col(weight)
-    if isinstance(weight, str) and weight in df.columns:
-        wtype = df.schema[weight].dataType
-    else:
-        wtype = df.select(wraw).schema[0].dataType
-    if isinstance(wtype, (_Y, _S, _I, _L, _B)):
-        # Integral weights: exact int64 path, no double round-trip
-        # (a bigint weight of 2^53+1 must not collapse to 2^53).
-        w = F.coalesce(wraw.cast("long"), F.lit(0).cast("long")).alias("__w")
-    else:
-        wd = wraw.cast("double")
-        rounded = F.round(wd, 0)
-        w = (
-            # NaN would sail through try_cast to the saturation branch
-            # where NaN > 0 is TRUE (Spark NaN-is-largest) -> INT64_MAX;
-            # treat NaN like NULL: contributes 0.
-            F.when(wd.isNull() | F.isnan(wd), F.lit(0).cast("long"))
-            .otherwise(
-                F.coalesce(
-                    rounded.try_cast("long"),  # NULL only when out of range
-                    F.when(rounded > 0, F.lit(INT64_MAX)).otherwise(
-                        F.lit(-INT64_MAX - 1)
-                    ),
-                )
-            )
-            .alias("__w")
-        )
-    # sum in decimal(38,0) (cannot overflow below ~10^19 addends of
-    # int64 magnitude) and clamp to the int64 range: positive overflow
-    # saturates at INT64_MAX, NEGATIVE overflow at INT64_MIN — the old
-    # try_sum+coalesce form mapped a negative overflow to +INT64_MAX,
-    # turning a hugely-negative item into the top heavy hitter.
-    freq = (
-        F.when(F.col(_ITEM).isNull(), F.lit(0).cast("long"))
-        .otherwise(
-            F.least(
-                F.greatest(
-                    F.sum(F.col("__w").cast("decimal(38,0)")),
-                    F.lit(-INT64_MAX - 1).cast("decimal(38,0)"),
-                ),
-                F.lit(INT64_MAX).cast("decimal(38,0)"),
-            ).cast("long")
-        )
-        .alias(_FREQ)
-    )
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        IntegerType,
-        LongType,
-        ShortType,
-    )
-
-    raw = _col(item)
-    if isinstance(item, str) and item in df.columns:
-        dtype = df.schema[item].dataType
-    else:
-        dtype = df.select(raw).schema[0].dataType
-    if isinstance(
-        dtype, (ByteType, ShortType, IntegerType, LongType, DateType, BooleanType)
-    ):
-        counted = (
-            df.select(*gcols, raw.alias(_ITEM), w)
-            .groupBy(*gnames, _ITEM)
-            .agg(freq)
-            .withColumn(_ITEM, F.col(_ITEM).cast("string"))
-        )
-    else:
-        counted = (
-            df.select(*gcols, normalize_item(item).alias(_ITEM), w)
-            .groupBy(*gnames, _ITEM)
-            .agg(freq)
-        )
-    out = _rank_and_pack(counted, gnames, counters, out_col, salt_buckets)
-    return _restore_group_names(out, df, group_cols)
+    return _item_agg(df, group_cols, item, weight, counters, out_col, salt_buckets)
 
 
 def topn_union_agg(
@@ -340,48 +473,15 @@ def topn_union_agg(
     counter budget).
     """
     counters = resolve_counters(counters, df.sparkSession)
-    gcols = [_col(c).alias(f"__g{i}") for i, c in enumerate(group_cols)]
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    exploded = df.select(*gcols, _col(sketch).alias("__sk")).select(
-        *gnames, F.explode_outer("__sk").alias(_ITEM, "__v")
+    src = _project(df, group_cols, _col(sketch).alias("__sk"))
+    text = topn_union_agg_sql(
+        "{src}",
+        [f"__g{i}" for i in range(len(group_cols))],
+        "__sk",
+        counters=counters,
+        salt_buckets=salt_buckets,
     )
-    counted = exploded.groupBy(*gnames, _ITEM).agg(
-        # saturating int64 sum at native long speed: try_sum yields NULL
-        # exact decimal(38,0) sum, ONE clamp to the int64 range — the
-        # weighted path's idiom. The old try_sum+coalesce(INT64_MAX)
-        # form had two union-only defects (negative frequencies are
-        # first-class here — sketch_from_json admits them and
-        # drop_nonpositive=False keeps them): a NEGATIVE overflow
-        # surfaced as +INT64_MAX (the top heavy-hitter slot), and a
-        # TRANSIENT mixed-sign overflow whose exact total fits int64
-        # still read as saturation, making the result depend on
-        # aggregation order (review pin).
-        # NULL-item marker rows (from explode_outer of NULL sketches) get
-        # frequency 0 so they survive as group-preserving placeholders.
-        # NULL map VALUES (a nullable-value sketch column, e.g. built
-        # with create_map) contribute 0 like the scalar merge_sketches
-        # coalesce.
-        F.when(F.col(_ITEM).isNull(), F.lit(0).cast("long"))
-        .otherwise(
-            F.least(
-                F.greatest(
-                    F.sum(
-                        F.coalesce(F.col("__v"), F.lit(0)).cast(
-                            "decimal(38,0)"
-                        )
-                    ),
-                    F.lit(-INT64_MAX - 1).cast("decimal(38,0)"),
-                ),
-                F.lit(INT64_MAX).cast("decimal(38,0)"),
-            ).cast("long")
-        )
-        .alias(_FREQ)
-    )
-    out = _rank_and_pack(
-        counted, gnames, counters, out_col, salt_buckets,
-        drop_nonpositive=False,  # union keeps the sketches' frequencies as-is
-    )
-    return _restore_group_names(out, df, group_cols)
+    return _run(df, group_cols, src, text, out_col)
 
 
 def topn_union_agg_global(
@@ -397,7 +497,7 @@ def topn_union_agg_global(
 
     This is the single-group shape where the final rank would otherwise
     sort EVERY distinct item on one reducer — at high cardinality pass
-    ``salt_buckets`` (lossless pre-filter, see ``_rank_and_pack``)."""
+    ``salt_buckets`` (lossless pre-filter, see ``_rank_pack_sql``)."""
     counters = resolve_counters(counters, df.sparkSession)
     with_g = df.select(F.lit(1).alias("__g0"), _col(sketch).alias("__sk"))
     out = topn_union_agg(
@@ -480,26 +580,19 @@ def topn_add_agg_grouping_sets(
         raise ValueError(f"grouping set {list(dup)!r} appears more than once")
     counters = resolve_counters(counters, df.sparkSession)
 
-    base = df.select(
-        *[_col(c).alias(f"__g{i}") for i, c in enumerate(universe)],
-        normalize_item(item).alias(_ITEM),
-    )
+    base = _project(df, universe, normalize_item(item).alias("__i"))
     gnames = [f"__g{i}" for i in range(len(universe))]
     name_of = {c: f"__g{i}" for i, c in enumerate(universe)}
-    sets_internal = [
-        [name_of[c] for c in s] + [_ITEM] for s in grouping_sets
-    ]
+    sets_internal = [[name_of[c] for c in s] + ["__i"] for s in grouping_sets]
     k = len(universe)
     gid = sum(
         (F.grouping(g).cast("long") * F.lit(1 << (k - 1 - i)))
         for i, g in enumerate(gnames)
     ) if k else F.lit(0).cast("long")
-    counted = (
-        base.groupingSets(sets_internal, *gnames, F.col(_ITEM))
-        .agg(F.count(F.col(_ITEM)).alias(_FREQ), gid.alias("__gid"))
+    counted = base.groupingSets(sets_internal, *gnames, F.col("__i")).agg(
+        F.count(F.col("__i")).alias("__f"), gid.alias("__gid")
     )
-    out = _rank_and_pack(counted, ["__gid"] + gnames, counters, out_col)
-    out = out.withColumnRenamed("__gid", gid_col)
-    for i, c in enumerate(universe):
-        out = out.withColumnRenamed(f"__g{i}", c)
-    return out
+    text = _rank_pack_sql(
+        "SELECT * FROM {src}", ["__gid", *gnames], counters, "topn"
+    )
+    return df.sparkSession.sql(text, src=counted).toDF(gid_col, *universe, out_col)

@@ -95,9 +95,10 @@ def _entry_cmp(left: Column, right: Column) -> Column:
     )
 
 
-# SQL-text twin of _entry_cmp, for the expr-string construction paths
-# (one parser round-trip instead of ~30 py4j Column calls; the parsed
-# plan is identical).
+# SQL-text twin of _entry_cmp, for the SQL-text aggregate builders
+# (aggregates.py) and the expr-string extraction paths (one parser
+# round-trip instead of ~30 py4j Column calls; the parsed plan is
+# identical).
 ENTRY_CMP_SQL = (
     "(l, r) -> CASE WHEN l.frequency > r.frequency THEN -1 "
     "WHEN l.frequency < r.frequency THEN 1 "

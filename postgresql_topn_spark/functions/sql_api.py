@@ -21,12 +21,12 @@ pandas-UDAF registration, so that is what this module provides:
 
 NOTE the performance contract: these registered forms cross the
 Python/Arrow boundary and exist for SQL-surface parity and scalar/ad-hoc
-use. Unlike the Column-API aggregates (functions/aggregates.py), a
-GROUPED_AGG pandas UDAF gets no Catalyst partial aggregation: every raw
-row shuffles to its group's reducer before Python sees it. The hot
-aggregation path for ``spark.sql()`` users is still Column-API
-composition (suite.py shows every pattern), which stays entirely
-JVM-side; registering does not slow anything else down.
+use. A GROUPED_AGG pandas UDAF gets no Catalyst partial aggregation:
+every raw row shuffles to its group's reducer before Python sees it.
+The hot aggregation path for ``spark.sql()`` users is :func:`topn_sql`,
+which rewrites the flagship aggregate statements onto the SQL-text
+builders of functions/aggregates.py — the same builders the Column API
+runs, entirely JVM-side. Registering does not slow anything else down.
 
 GUC parity: the reference reads ``topn.number_of_counters`` at every
 call (topn.c:229-233). Worker-side Python cannot read the session conf
@@ -60,6 +60,11 @@ from postgresql_topn_spark.conf import (
     DEFAULT_COUNTERS,
     INT64_MAX,
     resolve_counters,
+)
+from postgresql_topn_spark.functions.aggregates import (  # noqa: F401
+    topn_add_agg_sql,
+    topn_union_agg_sql,
+    topn_weighted_agg_sql,
 )
 from postgresql_topn_spark.functions.sketch import SKETCH_TYPE
 from postgresql_topn_spark.operators.sketch_state import truncate_key_bytes
@@ -229,19 +234,20 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
             c,
         )
 
-    # Precision caveat (SQL surface only): a NULL weight in a group makes
+    # Precision caveat (this UDAF only): a NULL weight in a group makes
     # Arrow ship the column as float64, so integer weights above 2^53
-    # lose ulps before Python sees them. The Column API sums INTEGRAL
-    # weight columns directly in Spark longs (exact for the full int64
-    # range, aggregates.py topn_weighted_agg) — use it when weights can
-    # exceed 2^53; fractional weights round-trip through double on every
-    # surface (they already carry double precision at the source).
+    # lose ulps before Python sees them. The Column API and topn_sql's
+    # rewrite sum INTEGRAL weight columns directly in Spark longs (exact
+    # for the full int64 range, aggregates._weight_sql) — use them when
+    # weights can exceed 2^53; fractional weights round-trip through
+    # double on every surface (they already carry double precision at
+    # the source).
     @pandas_udf(SKETCH_TYPE, PandasUDFType.GROUPED_AGG)
     def topn_weighted_agg_udaf(items: pd.Series, weights: pd.Series) -> dict:
-        # beyond-reference additive-measure form (aggregates.py:189-213):
-        # NULL/NaN weights contribute 0; items with total weight <= 0
-        # drop. Fractional weights round HALF-UP (away from zero) per
-        # row — the Column API's F.round semantics — NOT int() truncation
+        # beyond-reference additive-measure form (aggregates.
+        # topn_weighted_agg): NULL/NaN weights contribute 0; items with
+        # total weight <= 0 drop. Fractional weights round HALF-UP (away
+        # from zero) per row — Spark's round semantics — NOT int() truncation
         # (int(2.7) == 2 would silently disagree with the Column lane).
         # The rounding rule is SHARED with the Tier-2 sketch
         # (sketch_state.weight_to_long): Decimal on the shortest repr
@@ -298,11 +304,12 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
 # (topn.c:509-625, update/topn--2.3.0--2.3.1.sql:34-51). SQL users get
 # that in two ways:
 #
-# 1. PURE-BUILT-IN SQL, generated by topn_add_agg_sql / topn_union_agg_sql
-#    below: the Tier-1 composition (count -> window rank -> pack) compiled
-#    to one SQL string. Zero Python stages; Catalyst supplies MAP-SIDE
-#    partial aggregation on the (group, item) count, spill, and AQE —
-#    identical plan to the Column API (functions/aggregates.py).
+# 1. PURE-BUILT-IN SQL, generated by topn_add_agg_sql / topn_weighted_agg_sql
+#    / topn_union_agg_sql (defined in functions/aggregates.py, re-exported
+#    here): the Tier-1 composition (count -> window rank -> pack) as one
+#    SQL string. Zero Python stages; Catalyst supplies MAP-SIDE partial
+#    aggregation on the (group, item) count, spill, and AQE. These are
+#    the builders the Column API itself runs.
 #
 # 2. A one-line SALTED REWRITE of the UDAF form, when the UDAF API is
 #    wanted verbatim. Replace
@@ -321,229 +328,6 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
 #    exceed 255 bytes.) Pinned by test_sql_api.py.
 
 
-def _sql_ident_pairs(
-    group_by: "Sequence[str | tuple[str, str]]",
-) -> list[tuple[str, str]]:
-    return [(g, g) if isinstance(g, str) else (g[0], g[1]) for g in group_by]
-
-
-def _truncate_sql(s: str, limit: int = 255) -> str:
-    """SQL-text twin of sketch._byte_truncate (same exact
-    longest-fitting-prefix computation via the monotone filter count)."""
-    k = (
-        f"size(filter(sequence(1, greatest(least(char_length({s}), {limit}), 1)), "
-        f"k -> octet_length(substring({s}, 1, k)) <= {limit}))"
-    )
-    return f"substring({s}, 1, {k})"
-
-
-def _normalize_sql(item: str) -> str:
-    """SQL-text twin of sketch.normalize_item (TEXT intake + byte cap).
-    *item* should be a cheap expression (it is repeated in the text)."""
-    s = f"cast(({item}) as string)"
-    return (
-        f"CASE WHEN octet_length({s}) <= 255 THEN {s} "
-        f"ELSE {_truncate_sql(s)} END"
-    )
-
-
-# {cond} is the entry-keep rule: the counting/weighted builders drop
-# non-positive totals (not heavy hitters); the UNION builder keeps any
-# frequency the input sketches carry (scalar topn_union / MergeTopn
-# parity — zero entries are producible via sketch_from_json).
-_PACK_SQL = (
-    "map_from_entries(coalesce(array_sort(collect_list("
-    "CASE WHEN {cond} "
-    "THEN named_struct('item', __i, 'frequency', __f) END), "
-    "{cmp}), "
-    "cast(array() as array<struct<item:string,frequency:bigint>>)))"
-)
-_DROP_NONPOS_COND = "__f > 0 AND __i IS NOT NULL"
-_KEEP_ALL_COND = "__i IS NOT NULL"
-
-_RANK_ORDER = "ORDER BY __f DESC, __i ASC NULLS LAST"
-
-
-def topn_add_agg_sql(
-    source: str,
-    group_by: "Sequence[str | tuple[str, str]]",
-    item: str,
-    *,
-    counters: int | None = None,
-    out_col: str = "topn",
-    salt_buckets: int | None = None,
-    spark: SparkSession | None = None,
-    where: str | None = None,
-) -> str:
-    """SQL text for ``SELECT keys, topn_add_agg(item) … GROUP BY keys``
-    as a pure-built-in two-phase plan (no Python stages, map-side
-    partial combine on the count — the reference's parallel aggregate,
-    topn.c:509-625, expressed in Catalyst).
-
-    *group_by* entries are either column names or ``(alias, sql_expr)``
-    pairs; *item* is any SQL expression (kept cheap — it is repeated).
-    Semantics match the Column API / registered UDAF exactly: NULL items
-    skipped but all-NULL groups yield ``{}``, TEXT intake with 255-byte
-    cap, prune to *counters* by (frequency DESC, item ASC).
-    ``salt_buckets`` adds the lossless two-level rank for groups with
-    millions of distinct items (see aggregates._rank_and_pack). *where*
-    filters raw rows before the count (the original query's WHERE)."""
-    from postgresql_topn_spark.conf import resolve_counters as _rc
-
-    c = _rc(counters, spark)
-    pairs = _sql_ident_pairs(group_by)
-    sel_exprs = ", ".join(f"{e} AS {a}" for a, e in pairs)
-    norm = _normalize_sql(item)
-    wtext = f"WHERE {where} " if where else ""
-    counted = (
-        f"SELECT {sel_exprs + ', ' if pairs else ''}{norm} AS __i, "
-        f"count({norm}) AS __f FROM {source} {wtext}"
-        f"GROUP BY {', '.join(str(i + 1) for i in range(len(pairs) + 1))}"
-    )
-    return _two_phase_pack_sql(counted, pairs, c, out_col, salt_buckets)
-
-
-def _two_phase_pack_sql(
-    counted: str,
-    pairs: list[tuple[str, str]],
-    c: int,
-    out_col: str,
-    salt_buckets: int | None,
-) -> str:
-    """Shared rank+pack tail of the two-phase builders: optional
-    lossless salted pre-rank, per-group top-c rank, entry pack (the
-    non-positive-total drop rule of the counting/weighted builders)."""
-    from postgresql_topn_spark.functions.sketch import ENTRY_CMP_SQL
-
-    names = ", ".join(a for a, _ in pairs)
-    prefix_names = f"{names}, " if pairs else ""
-    part = f"PARTITION BY {names} " if pairs else ""
-    if salt_buckets and salt_buckets > 1:
-        salt_part = (
-            f"PARTITION BY {prefix_names}"
-            f"pmod(xxhash64(coalesce(__i, '')), {salt_buckets}) "
-        )
-        counted = (
-            f"SELECT {prefix_names}__i, __f FROM ("
-            f"SELECT {prefix_names}__i, __f, "
-            f"row_number() OVER ({salt_part}{_RANK_ORDER}) AS __srn "
-            f"FROM ({counted})) WHERE __srn <= {c} OR __i IS NULL"
-        )
-    pack = _PACK_SQL.format(cmp=ENTRY_CMP_SQL, cond=_DROP_NONPOS_COND)
-    return (
-        f"SELECT {prefix_names}{pack} AS {out_col} FROM ("
-        f"SELECT {prefix_names}__i, __f, "
-        f"row_number() OVER ({part}{_RANK_ORDER}) AS __rn "
-        f"FROM ({counted})) WHERE __rn <= {c} OR __i IS NULL "
-        + (f"GROUP BY {names}" if pairs else "")
-    )
-
-
-def topn_weighted_agg_sql(
-    source: str,
-    group_by: "Sequence[str | tuple[str, str]]",
-    item: str,
-    weight: str,
-    *,
-    counters: int | None = None,
-    out_col: str = "topn",
-    salt_buckets: int | None = None,
-    spark: SparkSession | None = None,
-    where: str | None = None,
-) -> str:
-    """SQL text for ``SELECT keys, topn_weighted_agg(item, weight) …
-    GROUP BY keys`` as the two-phase built-in plan — the weighted twin
-    of topn_add_agg_sql. Semantics match the Column API
-    (aggregates.topn_weighted_agg): NULL items skipped (all-NULL groups
-    yield ``{}``), NULL/NaN weights contribute 0, per-row round-half-up
-    to int64 with sign saturation, exact decimal(38,0) sum clamped to
-    the int64 range, items whose total is <= 0 dropped. SQL-text
-    weights route through double (the >2^53 integral caveat — use the
-    Column API when integer weights can exceed 2^53)."""
-    from postgresql_topn_spark.conf import resolve_counters as _rc
-
-    c = _rc(counters, spark)
-    pairs = _sql_ident_pairs(group_by)
-    sel_exprs = ", ".join(f"{e} AS {a}" for a, e in pairs)
-    norm = _normalize_sql(item)
-    wd = f"cast(({weight}) as double)"
-    w_row = (
-        f"CASE WHEN {wd} IS NULL OR isnan({wd}) THEN cast(0 as bigint) "
-        f"ELSE coalesce(try_cast(round({wd}, 0) as bigint), "
-        f"CASE WHEN round({wd}, 0) > 0 THEN {INT64_MAX}"
-        f" ELSE {-INT64_MAX - 1} END) END"
-    )
-    freq = (
-        f"cast(least(greatest(sum(cast({w_row} as decimal(38,0))), "
-        f"cast({-INT64_MAX - 1} as decimal(38,0))), "
-        f"cast({INT64_MAX} as decimal(38,0))) as bigint)"
-    )
-    wtext = f"WHERE {where} " if where else ""
-    # a NULL-item group row must carry __f = 0 (not its weight sum):
-    # it exists only as the keep-the-group marker, and a big __f would
-    # let it consume a top-c rank slot from a real item
-    counted = (
-        f"SELECT {sel_exprs + ', ' if pairs else ''}{norm} AS __i, "
-        f"CASE WHEN ({norm}) IS NULL THEN cast(0 as bigint) "
-        f"ELSE {freq} END AS __f FROM {source} {wtext}"
-        f"GROUP BY {', '.join(str(i + 1) for i in range(len(pairs) + 1))}"
-    )
-    return _two_phase_pack_sql(counted, pairs, c, out_col, salt_buckets)
-
-
-def topn_union_agg_sql(
-    source: str,
-    group_by: "Sequence[str | tuple[str, str]]",
-    sketch_col: str,
-    *,
-    counters: int | None = None,
-    out_col: str = "topn",
-    spark: SparkSession | None = None,
-    where: str | None = None,
-) -> str:
-    """SQL text for ``SELECT keys, topn_union_agg(sketch) … GROUP BY``
-    as a pure-built-in two-phase plan: explode the (bounded, <= counters
-    entries) stored sketches, sum per item with map-side partial
-    combine, rank, re-pack. Frequencies sum in decimal(38,0) and
-    saturate at INT64_MAX like the reference (topn.c:997-1009) instead
-    of erroring under ANSI mode. NULL / empty sketches keep their group
-    alive with ``{}`` (LATERAL VIEW OUTER). *where* filters source rows
-    before the explode (predicates see the source's columns only)."""
-    from postgresql_topn_spark.conf import resolve_counters as _rc
-    from postgresql_topn_spark.functions.sketch import ENTRY_CMP_SQL
-
-    c = _rc(counters, spark)
-    pairs = _sql_ident_pairs(group_by)
-    names = ", ".join(a for a, _ in pairs)
-    sel_exprs = ", ".join(f"{e} AS {a}" for a, e in pairs)
-    prefix_names = f"{names}, " if pairs else ""
-    part = f"PARTITION BY {names} " if pairs else ""
-    wtext = f"WHERE {where} " if where else ""
-    summed = (
-        f"SELECT {sel_exprs + ', ' if pairs else ''}__t.__i AS __i, "
-        # coalesce INSIDE least: Spark's least skips NULLs, so an
-        # all-NULL (empty-sketch marker) group must become 0 before the
-        # saturation clamp, not fall through to INT64_MAX. The clamp is
-        # BOTH-direction: negative frequencies are first-class on the
-        # union path, and a total under INT64_MIN would otherwise fail
-        # the bigint cast under ANSI (review pin)
-        f"cast(least(greatest(coalesce(sum(cast(__t.__fr as decimal(38,0))), "
-        f"0), {-INT64_MAX - 1}), {INT64_MAX}) as bigint) AS __f "
-        f"FROM {source} "
-        f"LATERAL VIEW OUTER explode({sketch_col}) __t AS __i, __fr "
-        f"{wtext}"
-        f"GROUP BY {', '.join(str(i + 1) for i in range(len(pairs) + 1))}"
-    )
-    pack = _PACK_SQL.format(cmp=ENTRY_CMP_SQL, cond=_KEEP_ALL_COND)
-    return (
-        f"SELECT {prefix_names}{pack} AS {out_col} FROM ("
-        f"SELECT {prefix_names}__i, coalesce(__f, 0) AS __f, "
-        f"row_number() OVER ({part}{_RANK_ORDER}) AS __rn "
-        f"FROM ({summed})) WHERE __rn <= {c} OR __i IS NULL "
-        + (f"GROUP BY {names}" if pairs else "")
-    )
-
-
 # ---------------------------------------------------------------------------
 # topn_sql: run the reference's flagship SQL verbatim WITHOUT the UDAF wall
 # ---------------------------------------------------------------------------
@@ -553,14 +337,14 @@ def topn_union_agg_sql(
 #     SELECT keys, topn_add_agg(item) FROM t GROUP BY keys
 # (update/topn--2.3.0--2.3.1.sql:34-51, README.md:84-96) into spark.sql()
 # verbatim gets the slow lane. topn_sql() is the front door that fixes
-# that: it pattern-matches topn_add_agg / topn_union_agg aggregate calls
-# in the statement (including inside WITH-CTE bodies) and rewrites each
-# matched SELECT onto the pure-built-in two-phase plan above — zero
-# Python stages, map-side partial combine, identical results (the
-# rewritten form is the same count->rank->pack composition the Column
-# API plans, equivalence pinned in tests). Shapes the rewriter cannot
-# prove safe fall back to the registered UDAF verbatim, with a runtime
-# warning naming the scale caveat.
+# that: it pattern-matches topn_add_agg / topn_weighted_agg /
+# topn_union_agg aggregate calls in the statement (including inside
+# WITH-CTE bodies) and rewrites each matched SELECT onto the
+# pure-built-in two-phase plan above — zero Python stages, map-side
+# partial combine, identical results (the rewritten form runs the same
+# builder the Column API runs). Shapes the rewriter cannot prove safe
+# fall back to the registered UDAF verbatim, with a runtime warning
+# naming the scale caveat.
 
 import re as _re
 import warnings as _warnings
@@ -892,6 +676,7 @@ def _rewrite_select(
             args[0],
             counters=counters,
             out_col=out_alias,
+            salt_buckets=salt_buckets,
             spark=spark,
             where=where_text,
         )
@@ -1127,7 +912,8 @@ def topn_sql(
     Catalyst plans it. Everything else in the statement (LATERAL
     ``topn()`` extraction, scalar ``topn_add``/``topn_union``,
     unrecognized aggregate shapes) runs through the registered SQL
-    functions unchanged.
+    functions unchanged. ``salt_buckets`` applies the lossless salted
+    rank to every rewritten aggregate, union included.
 
     This is the recommended ``spark.sql`` entry point for aggregate
     queries; calling ``spark.sql`` directly on a UDAF aggregate still

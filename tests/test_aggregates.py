@@ -1,6 +1,7 @@
 """Aggregate-surface semantics — ports of add_agg / union_agg /
 customer_reviews_query pg_regress suites (SURVEY.md §5)."""
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -233,3 +234,184 @@ class TestWeightedAgg:
         )
         out = topn_weighted_agg(df, ["grp"], "item", "w", counters=10).collect()
         assert dict(out[0]["topn"]) == {"a": big}
+
+
+# Caller names that would break if spliced into SQL text: a space or a
+# backtick in the output name, a reserved word and a dotted name as group
+# columns, Column-expression keys, and an input name reused by another
+# argument. Every Column aggregate must handle each one and keep the
+# caller-facing names on its result.
+_HOSTILE_ROWS = [
+    ("s1", "d1", "x", "a", 2),
+    ("s1", "d1", "x", "b", 5),
+    ("s1", "d2", "y", "a", 1),
+    ("s2", "d2", "y", "a", 4),
+    ("s2", "d2", "x", None, 7),
+    ("s2", "d1", "x", "c", 3),
+]
+_HOSTILE_OUT = "my `top n"
+_HOSTILE_CASES = {
+    "add out_col": (
+        ["g", _HOSTILE_OUT],
+        [("x", {"a": 1, "b": 1, "c": 1}), ("y", {"a": 2})],
+    ),
+    "add select": (
+        ["select", "topn"],
+        [("s1", {"a": 2, "b": 1}), ("s2", {"a": 1, "c": 1})],
+    ),
+    "add dotted": (
+        ["`a.b`", "topn"],
+        [("d1", {"a": 1, "b": 1, "c": 1}), ("d2", {"a": 2})],
+    ),
+    "add colexpr": (
+        ["upper(g)", "s", "topn"],
+        [("X", "s1", {"a": 1, "b": 1}), ("X", "s2", {"c": 1}),
+         ("Y", "s1", {"a": 1}), ("Y", "s2", {"a": 1})],
+    ),
+    "add item=group": (
+        ["it", "topn"],
+        [("a", {"a": 3}), ("b", {"b": 1}), ("c", {"c": 1}), (None, {})],
+    ),
+    "weighted out_col": (
+        ["g", _HOSTILE_OUT],
+        [("x", {"a": 2, "b": 5, "c": 3}), ("y", {"a": 5})],
+    ),
+    "weighted select": (
+        ["select", "topn"],
+        [("s1", {"a": 3, "b": 5}), ("s2", {"a": 4, "c": 3})],
+    ),
+    "weighted dotted": (
+        ["`a.b`", "topn"],
+        [("d1", {"a": 2, "b": 5, "c": 3}), ("d2", {"a": 5})],
+    ),
+    "weighted colexpr": (
+        ["upper(g)", "s", "topn"],
+        [("X", "s1", {"a": 2, "b": 5}), ("X", "s2", {"c": 3}),
+         ("Y", "s1", {"a": 1}), ("Y", "s2", {"a": 4})],
+    ),
+    "weighted item=group": (
+        ["it", "topn"],
+        [("a", {"a": 7}), ("b", {"b": 5}), ("c", {"c": 3}), (None, {})],
+    ),
+    "union out_col": (
+        ["g", _HOSTILE_OUT],
+        [("x", {"a": 1, "b": 1, "c": 1}), ("y", {"a": 2})],
+    ),
+    "union select": (
+        ["select", "topn"],
+        [("x", {"a": 1, "b": 1, "c": 1}), ("y", {"a": 2})],
+    ),
+    "union dotted": (
+        ["`a.b`", "topn"],
+        [("s1", {"a": 2, "b": 1}), ("s2", {"a": 1, "c": 1})],
+    ),
+    "union colexpr": (
+        ["upper(g)", "s", "topn"],
+        [("X", "s1", {"a": 1, "b": 1}), ("X", "s2", {"c": 1}),
+         ("Y", "s1", {"a": 1}), ("Y", "s2", {"a": 1})],
+    ),
+    "union out=sketch": (
+        ["g", "sk"],
+        [("x", {"a": 1, "b": 1, "c": 1}), ("y", {"a": 2})],
+    ),
+    "global out_col": ([_HOSTILE_OUT], [({"a": 3, "b": 1, "c": 1},)]),
+    "global select": (["topn"], [({"a": 3, "b": 1, "c": 1},)]),
+    "global dotted": (["topn"], [({"a": 3, "b": 1, "c": 1},)]),
+    "global colexpr": (["topn"], [({"a": 3, "b": 1, "c": 1},)]),
+    "global out=sketch": (["sk"], [({"a": 3, "b": 1, "c": 1},)]),
+    "gs out_col": (
+        ["gid", "g", _HOSTILE_OUT],
+        [(0, "x", {"a": 1, "b": 1, "c": 1}), (0, "y", {"a": 2}),
+         (1, None, {"a": 3, "b": 1, "c": 1})],
+    ),
+    "gs select": (
+        ["gid", "select", "g", "topn"],
+        [(0, "s1", "x", {"a": 1, "b": 1}), (0, "s1", "y", {"a": 1}),
+         (0, "s2", "x", {"c": 1}), (0, "s2", "y", {"a": 1}),
+         (1, "s1", None, {"a": 2, "b": 1}), (1, "s2", None, {"a": 1, "c": 1})],
+    ),
+    "gs dotted": (
+        ["gid", "`a.b`", "topn"],
+        [(0, "d1", {"a": 1, "b": 1, "c": 1}), (0, "d2", {"a": 2}),
+         (1, None, {"a": 3, "b": 1, "c": 1})],
+    ),
+    "gs colexpr item": (
+        ["gid", "g", "topn"],
+        [(0, "x", {"A": 1, "B": 1, "C": 1}), (0, "y", {"A": 2})],
+    ),
+    "gs item=group": (
+        ["gid", "it", "topn"],
+        [(0, "a", {"a": 3}), (0, "b", {"b": 1}), (0, "c", {"c": 1}),
+         (0, None, {}), (1, None, {"a": 3, "b": 1, "c": 1})],
+    ),
+}
+
+
+def _hostile_run(spark, case):
+    from postgresql_topn_spark.functions.aggregates import (
+        topn_add_agg,
+        topn_add_agg_grouping_sets,
+        topn_union_agg,
+        topn_weighted_agg,
+    )
+
+    df = spark.createDataFrame(
+        _HOSTILE_ROWS, "`select` string, `a.b` string, g string, it string, w bigint"
+    )
+    fn, _, shape = case.partition(" ")
+    groups = {
+        "out_col": ["g"],
+        "select": ["select"],
+        "dotted": ["`a.b`"],
+        "colexpr": [F.upper("g"), F.col("select").alias("s")],
+        "item=group": ["it"],
+    }
+    kw = {"counters": 10}
+    if shape == "out_col":
+        kw["out_col"] = _HOSTILE_OUT
+    if fn in ("add", "weighted"):
+        args = (df, groups[shape], "it") + ((("w",)) if fn == "weighted" else ())
+        agg = topn_add_agg if fn == "add" else topn_weighted_agg
+        return agg(*args, **kw)
+    # union inputs: per-(select, g) sketches, with copies under hostile names
+    sk = (
+        topn_add_agg(df, ["select", "g"], "it", counters=10, out_col="sk")
+        .withColumnRenamed("select", "sel")
+        .withColumn("a.b", F.col("sel"))
+        .withColumn("select", F.col("g"))
+    )
+    if fn == "union":
+        if shape == "colexpr":
+            return topn_union_agg(
+                sk, [F.upper("g"), F.col("sel").alias("s")], F.col("sk"), **kw
+            )
+        if shape == "out=sketch":
+            return topn_union_agg(sk, ["g"], "sk", counters=10, out_col="sk")
+        return topn_union_agg(sk, groups[shape], "sk", **kw)
+    if fn == "global":
+        named = sk.select(F.col("sk").alias("select"), F.col("sk").alias("a.b"))
+        sketch = {"out_col": "sk", "select": "select", "dotted": "`a.b`",
+                  "colexpr": F.col("sk"), "out=sketch": "sk"}[shape]
+        if shape == "out=sketch":
+            kw["out_col"] = "sk"
+        return topn_union_agg_global(
+            named if shape in ("select", "dotted") else sk, sketch, **kw
+        )
+    sets = {
+        "out_col": [["g"], []],
+        "select": [["select", "g"], ["select"]],
+        "dotted": [["`a.b`"], []],
+        "colexpr item": [["g"]],
+        "item=group": [["it"], []],
+    }[shape]
+    item = F.upper("it") if shape == "colexpr item" else "it"
+    return topn_add_agg_grouping_sets(df, sets, item, **kw)
+
+
+@pytest.mark.parametrize("case", sorted(_HOSTILE_CASES))
+def test_hostile_caller_names(spark, case):
+    cols, rows = _HOSTILE_CASES[case]
+    out = _hostile_run(spark, case)
+    assert out.columns == cols
+    got = [tuple(dict(v) if isinstance(v, dict) else v for v in r) for r in out.collect()]
+    assert sorted(got, key=repr) == sorted(rows, key=repr)

@@ -49,6 +49,39 @@ def test_add_agg_two_shuffles_with_partial_combine(spark):
     assert python_stages(sk) == 0
 
 
+def _exchange_key_types(df):
+    """Key data types of every hash exchange in the physical plan (the
+    adaptive plan's initial form, exchanges inserted)."""
+    root = df._jdf.queryExecution().executedPlan()
+    if root.nodeName() == "AdaptiveSparkPlan":
+        root = root.initialPlan()
+    out, stack = [], [root]
+    while stack:
+        node = stack.pop()
+        part = node.outputPartitioning() if node.nodeName() == "Exchange" else None
+        if part is not None and part.getClass().getSimpleName() == "HashPartitioning":
+            keys = part.expressions()
+            out.append([keys.apply(i).dataType().simpleString() for i in range(keys.size())])
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_add_agg_integral_item_shuffles_raw_key(spark):
+    """An integral item groups on its raw value: the (group, item) count
+    exchange hashes the int column, and the string cast runs once per
+    distinct group after the count, not per row before the shuffle."""
+    from postgresql_topn_spark.sources.tables import load_table
+
+    li = load_table(spark, SF, "lineitem")
+    sk = topn_add_agg(li, ["l_returnflag"], "l_linenumber", counters=100)
+    count_keys = [k for k in _exchange_key_types(sk) if len(k) == 2]
+    assert count_keys == [["string", li.schema["l_linenumber"].dataType.simpleString()]]
+    assert count_keys[0][1] in ("int", "bigint")
+    assert "octet_length" not in plan_str(sk)
+    assert hash_shuffles(sk) == 2
+
+
 def test_cosine_topk_corpus_never_shuffles(emb):
     """Brute-force ANN: corpus streams through one Python stage; the
     only key shuffle is the final per-query rank over ~k rows/query."""
@@ -720,3 +753,24 @@ def test_extract_frames_single_decode_pass_no_shuffle(spark):
     gate = QUERIES["multimodal_meta_frames"](spark, SF)
     assert hash_shuffles(gate) == 0
     assert python_stages(gate) == 3
+
+
+def test_byte_cap_evaluated_once_in_count_stage(spark):
+    """The item byte cap (the octet_length CASE) is projected once per
+    row and the count aggregates the projected item: the Column API and
+    topn_sql's rewrite both show the CASE exactly once in the plan."""
+    from postgresql_topn_spark.functions.sql_api import topn_sql
+    from postgresql_topn_spark.sources.tables import load_table
+
+    li = load_table(spark, SF, "lineitem")
+    li.createOrReplaceTempView("__tp_plan_lineitem")
+    col = topn_add_agg(li, ["l_returnflag"], "l_linestatus", counters=100)
+    sql = topn_sql(
+        spark,
+        "SELECT l_returnflag, topn_add_agg(l_linestatus) AS topn "
+        "FROM __tp_plan_lineitem GROUP BY l_returnflag",
+        counters=100,
+    )
+    for df in (col, sql):
+        assert plan_str(df, "simple").count("CASE WHEN (octet_length(") == 1
+        assert hash_shuffles(df) == 2

@@ -1031,3 +1031,86 @@ def test_add_and_union_four_surface_randomized(sql_session):
     vals = [v for m in u1.values() for v in m.values()]
     assert any(v == big for v in vals)      # positive saturation hit
     assert any(v < 0 for v in vals)         # negative totals survive union
+
+
+def test_topn_sql_salt_reaches_union(spark):
+    """topn_sql(salt_buckets=) salts the union statements too, the
+    grand-total union above all (its single final rank is the hot spot
+    the salt exists for): two Window nodes instead of one, same values."""
+    import re
+
+    from postgresql_topn_spark.functions.sql_api import topn_sql
+    from postgresql_topn_spark.plans.audit import plan_str
+
+    spark.createDataFrame(
+        [(i % 3, {f"k{j}": (i * 7 + j) % 11 + 1 for j in range(i % 9 + 1)})
+         for i in range(60)] + [(3, None)],
+        "g int, sk map<string,bigint>",
+    ).createOrReplaceTempView("tp_salt_sks")
+    for sql in (
+        "SELECT topn_union_agg(sk) AS topn FROM tp_salt_sks",
+        "SELECT g, topn_union_agg(sk) AS topn FROM tp_salt_sks GROUP BY g",
+    ):
+        plain = topn_sql(spark, sql, counters=3)
+        salted = topn_sql(spark, sql, counters=3, salt_buckets=8)
+        windows = lambda df: len(re.findall(r"\(\d+\) Window", plan_str(df)))  # noqa: E731
+        assert (windows(plain), windows(salted)) == (1, 2)
+        rows = lambda df: sorted(  # noqa: E731
+            (tuple(dict(v) if isinstance(v, dict) else v for v in r) for r in df.collect()),
+            key=repr,
+        )
+        assert rows(salted) == rows(plain)
+
+
+def test_sql_integral_weight_exact_beyond_2p53(spark):
+    """An integral weight sums in int64 on the SQL-text surface as on the
+    Column API: 2^53+1 must not collapse to 2^53 through double."""
+    from postgresql_topn_spark.functions.sql_api import (
+        topn_sql,
+        topn_weighted_agg_sql,
+    )
+
+    big = (1 << 53) + 1
+    spark.createDataFrame(
+        [("g", "a", big), ("g", "a", 0), ("g", "b", None)],
+        "grp string, item string, w bigint",
+    ).createOrReplaceTempView("tp_big_w")
+    built = spark.sql(
+        topn_weighted_agg_sql("tp_big_w", ["grp"], "item", "w", counters=10)
+    ).collect()
+    rewritten = topn_sql(
+        spark,
+        "SELECT grp, topn_weighted_agg(item, w) AS topn FROM tp_big_w GROUP BY grp",
+        counters=10,
+    ).collect()
+    assert dict(built[0]["topn"]) == {"a": big}
+    assert dict(rewritten[0]["topn"]) == {"a": big}
+
+
+def test_rank_and_pack_written_once():
+    """The SQL-text rank (plain or salted) and the sketch pack exist in
+    one function, the rank+pack tail every Tier-1 aggregate runs; no
+    module under functions/ may carry a second copy."""
+    import ast
+    import pathlib
+
+    import postgresql_topn_spark.functions.aggregates as agg
+
+    rank, pack = "row_number() over", "map_from_entries(coalesce(array_sort(collect_list("
+    seen = 0
+    for path in sorted(pathlib.Path(agg.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        if path.name == "aggregates.py":
+            fn = next(
+                n for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef) and n.name == "_rank_pack_sql"
+            )
+            lines = src.splitlines(keepends=True)
+            body = " ".join("".join(lines[fn.lineno - 1 : fn.end_lineno]).split()).lower()
+            assert rank in body and pack in body
+            src = "".join(lines[: fn.lineno - 1] + lines[fn.end_lineno :])
+        flat = " ".join(src.split()).lower()
+        assert rank not in flat, f"{path.name} carries its own SQL rank"
+        assert pack not in flat, f"{path.name} carries its own sketch pack"
+        seen += 1
+    assert seen > 5
