@@ -351,14 +351,18 @@ def _run(
     out_col: str,
 ) -> DataFrame:
     """Run builder *text* (reading ``{src}``) over the projected *src* and
-    restore the caller-facing names: string group cols name themselves;
-    Column expressions are resolved in ONE batched select (one analysis
-    round-trip, not one per col)."""
+    restore the caller-facing names."""
     out = df.sparkSession.sql(text, src=src)
+    return out.toDF(*_caller_names(df, group_cols), out_col)
+
+
+def _caller_names(df: DataFrame, group_cols: Sequence[Column | str]) -> list[str]:
+    """Output names of *group_cols* over *df*: string group cols name
+    themselves; Column expressions are resolved in ONE batched select
+    (one analysis round-trip, not one per col)."""
     col_objs = [_col(c) for c in group_cols if not isinstance(c, str)]
     resolved = iter(df.select(*col_objs).columns if col_objs else ())
-    names = [c if isinstance(c, str) else next(resolved) for c in group_cols]
-    return out.toDF(*names, out_col)
+    return [c if isinstance(c, str) else next(resolved) for c in group_cols]
 
 
 def _project(

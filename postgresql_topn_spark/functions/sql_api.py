@@ -19,6 +19,12 @@ pandas-UDAF registration, so that is what this module provides:
   queries (Arrow-batched; the whole group's items stream through one
   Python worker).
 
+Every one of these finishes through ``sketch_state.pack_counts``: exact
+totals saturate into int64 before they are ranked (frequency DESC, item
+ASC) and cut, the reference's order (topn.c:997-1009 before
+topn.c:869-908), so at the int64 edge they keep the same items as the
+Tier-1 builders and the Tier-2 sketches.
+
 NOTE the performance contract: these registered forms cross the
 Python/Arrow boundary and exist for SQL-surface parity and scalar/ad-hoc
 use. A GROUPED_AGG pandas UDAF gets no Catalyst partial aggregation:
@@ -55,34 +61,24 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import PandasUDFType, pandas_udf, udf, udtf
 
-from postgresql_topn_spark.conf import (
-    CONF_KEY,
-    DEFAULT_COUNTERS,
-    INT64_MAX,
-    resolve_counters,
-)
+from postgresql_topn_spark.conf import CONF_KEY, DEFAULT_COUNTERS, resolve_counters
 from postgresql_topn_spark.functions.aggregates import (  # noqa: F401
     topn_add_agg_sql,
     topn_union_agg_sql,
     topn_weighted_agg_sql,
 )
 from postgresql_topn_spark.functions.sketch import SKETCH_TYPE
-from postgresql_topn_spark.operators.sketch_state import truncate_key_bytes
+from postgresql_topn_spark.operators.sketch_state import (
+    clamp64,
+    pack_counts,
+    truncate_key_bytes,
+    weight_to_long,
+)
 
 # Sessions that registered with counters=None (follow-the-conf). A conf
 # change through set_number_of_counters() re-registers these so the next
 # spark.sql() call sees the new budget — PG's GUC assign-hook analogue.
 _FOLLOW_CONF_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
-
-
-def _sorted_items(sketch: dict) -> list[tuple[str, int]]:
-    return sorted(sketch.items(), key=lambda kv: (-kv[1], kv[0]))
-
-
-def _prune(sketch: dict, counters: int) -> dict:
-    if len(sketch) <= counters:
-        return sketch
-    return dict(_sorted_items(sketch)[:counters])
 
 
 def refresh_sql_registration(spark: SparkSession) -> None:
@@ -146,8 +142,7 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
                 )
             if sketch is None or n is None or n <= 0:
                 return
-            for item, freq in _sorted_items(sketch)[:n]:
-                yield item, freq
+            yield from pack_counts(sketch, n).items()
 
     @udf(returnType=SKETCH_TYPE)
     def topn_add_udf(sketch: dict, item: str):
@@ -161,10 +156,10 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
         item = truncate_key_bytes(str(item))
         out = dict(sketch)
         if item in out:
-            out[item] = min(out[item] + 1, INT64_MAX)
+            out[item] = clamp64(out[item] + 1)
             return out  # prune only fires on insert (topn.c:350)
         out[item] = 1
-        return _prune(out, c)
+        return pack_counts(out, c)
 
     @udf(returnType=SKETCH_TYPE)
     def topn_union_udf(a: dict, b: dict):
@@ -174,15 +169,7 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
         out = dict(a)
         for k, v in b.items():
             out[k] = out.get(k, 0) + v
-        # exact Python-int sums, ONE both-direction clamp at emit: the
-        # old min(..., INT64_MAX) per-add capped only upward, so a
-        # hugely-negative merged total crashed the Arrow int64 return
-        # (and for two operands exact-then-clamp equals the Column
-        # lane's sign-aware _sat_add)
-        return _prune(
-            {k: max(min(v, INT64_MAX), -INT64_MAX - 1) for k, v in out.items()},
-            c,
-        )
+        return pack_counts(out, c)
 
     @udf(returnType="array<struct<item:string,frequency:bigint>>")
     def topn_entries_udf(sketch: dict, n: int):
@@ -195,15 +182,15 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
             return None
         if n <= 0:
             return []
-        return _sorted_items(sketch)[:n]
+        return list(pack_counts(sketch, n).items())
 
     # --- GROUPED_AGG aggregates: the reference's primary API surface ---
     # (update/topn--2.3.0--2.3.1.sql:34-51). Arrow ships each group's
     # column batch; Python counts/merges and returns one bounded map.
     # Semantics mirror functions/aggregates.py: NULL items/sketches are
     # skipped but an all-NULL group still yields {} (topn.c:655-661),
-    # keys are byte-capped on entry, sums saturate at INT64_MAX, and the
-    # result is pruned to the top `c` by (frequency DESC, item ASC).
+    # keys are byte-capped on entry, and the exact totals finish through
+    # pack_counts (saturate, rank, cut to `c`).
 
     @pandas_udf(SKETCH_TYPE, PandasUDFType.GROUPED_AGG)
     def topn_add_agg_udaf(items: pd.Series) -> dict:
@@ -213,9 +200,7 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
                 continue
             k = truncate_key_bytes(str(it))
             counts[k] = counts.get(k, 0) + 1
-        return _prune(
-            {k: min(v, INT64_MAX) for k, v in counts.items()}, c
-        )
+        return pack_counts(counts, c)
 
     @pandas_udf(SKETCH_TYPE, PandasUDFType.GROUPED_AGG)
     def topn_union_agg_udaf(sketches: pd.Series) -> dict:
@@ -224,15 +209,8 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
             if sk is None:
                 continue
             for k, v in sk.items():
-                # exact sums, one clamp at emit (matches the Column
-                # lane's decimal-sum-then-clamp): the per-add upward
-                # clamp was arrival-order dependent for mixed signs
-                # and let negative totals under INT64_MIN crash Arrow
                 out[k] = out.get(k, 0) + v
-        return _prune(
-            {k: max(min(v, INT64_MAX), -INT64_MAX - 1) for k, v in out.items()},
-            c,
-        )
+        return pack_counts(out, c)
 
     # Precision caveat (this UDAF only): a NULL weight in a group makes
     # Arrow ship the column as float64, so integer weights above 2^53
@@ -255,28 +233,13 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
         # diverges on edge doubles), saturation for infinities and
         # beyond-int64 magnitudes (a raw Decimal quantize of 1e30 would
         # blow the 28-digit context and kill the task).
-        from postgresql_topn_spark.operators.sketch_state import (
-            weight_to_long,
-        )
-
         totals: dict[str, int] = {}
         for it, w in zip(items, weights):
             if it is None:
                 continue
             k = truncate_key_bytes(str(it))
-            wv = weight_to_long(w)
-            # exact bigint running sum, ONE clamp at the end: a running
-            # per-add clamp would make the total depend on row order,
-            # which a distributed aggregate must never do
-            totals[k] = totals.get(k, 0) + wv
-        return _prune(
-            {
-                k: max(min(v, INT64_MAX), -INT64_MAX - 1)
-                for k, v in totals.items()
-                if v > 0
-            },
-            c,
-        )
+            totals[k] = totals.get(k, 0) + weight_to_long(w)
+        return pack_counts(totals, c, drop_nonpositive=True)
 
     spark.udtf.register("topn", TopnUdtf)
     spark.udf.register("topn_add", topn_add_udf)
@@ -486,6 +449,9 @@ def _norm_expr(s: str) -> str:
             flush()
             j = i + 1
             while j < n:
+                if s[j] == "\\" and ch != "`":  # _top_mask's escape rule
+                    j += 2
+                    continue
                 if s[j] == ch:
                     if j + 1 < n and s[j + 1] == ch:
                         j += 2

@@ -25,7 +25,16 @@ combine via serialize/deserialize/union_internal, topn.c:509-625):
   partition — the map-side partial combine, before any shuffle; emits
   each partial state's entries as plain rows.
 - phase 2 (shuffle on group keys + `applyInPandas`): MergeTopn-style
-  merge of partial entries, final prune to `counters`.
+  merge of partial entries, then :func:`pack_counts`, which returns the
+  ``map<string,bigint>`` sketch itself (no JSON hop) in (frequency
+  DESC, item ASC) entry order, like Tier-1.
+
+Every Python lane of the package (these merges, the streaming
+snapshot, the registered SQL UDFs and UDAFs) finishes through
+:func:`pack_counts`: it saturates each exact total into int64 before it
+ranks and cuts, as the reference saturates on every add
+(topn.c:997-1009) before ``PruneHashTable`` ranks (topn.c:869-908). So
+at the int64 edge every lane keeps the same items as Tier-1.
 
 Only the entries of bounded sketches cross the wire (<= 3 x counters
 rows per group per input partition), never raw items — at 100 TB this
@@ -38,7 +47,6 @@ nondeterministic here; we pin determinism as a documented deviation.
 
 from __future__ import annotations
 
-import json
 import math
 from collections.abc import Iterator, Sequence
 from decimal import ROUND_HALF_UP, Decimal
@@ -50,6 +58,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from postgresql_topn_spark.conf import INT64_MAX, resolve_counters
+from postgresql_topn_spark.functions.aggregates import _caller_names
 from postgresql_topn_spark.functions.sketch import _col
 
 UNION_FACTOR = 3  # topn.c:50
@@ -57,12 +66,36 @@ UNION_FACTOR = 3  # topn.c:50
 
 def clamp64(v: int) -> int:
     """Saturate an exact integer total into int64 — applied ONCE at
-    each egress (JSON/state-store materialization), never per add:
+    each egress (:func:`pack_counts`, the state store), never per add:
     a running per-add clamp would make mixed-sign weighted totals
     depend on partition arrival order, which a distributed aggregate
     must never do (Tier-1 sums exactly in decimal(38,0) and clamps
     once; Tier-2 matches)."""
     return max(min(v, INT64_MAX), -INT64_MAX - 1)
+
+
+def _rank_cut(pairs, keep: int) -> dict[str, int]:
+    """``PruneHashTable``: rank by ``compareFrequentTopnItem``
+    (frequency DESC, item ASC, topn.c:817-834) and keep the first
+    *keep* (topn.c:869-908)."""
+    return dict(sorted(pairs, key=lambda kv: (-kv[1], kv[0]))[:keep])
+
+
+def pack_counts(
+    counts: dict[str, int], counters: int, *, drop_nonpositive: bool = False
+) -> dict[str, int]:
+    """The finishing rule of every Python lane: saturate each exact
+    total with :func:`clamp64`, drop totals <= 0 when asked (the
+    weighted "not a heavy hitter" rule), keep the top *counters* by
+    (frequency DESC, item ASC) and return them in that order.
+
+    Saturating BEFORE ranking is the reference's order: two totals past
+    INT64_MAX tie at INT64_MAX and the smaller item wins, as in Tier-1;
+    ranking exact totals first would keep the other one."""
+    pairs = ((k, clamp64(v)) for k, v in counts.items())
+    if drop_nonpositive:
+        pairs = ((k, v) for k, v in pairs if v > 0)
+    return _rank_cut(pairs, counters)
 
 
 def truncate_key_bytes(s: str, limit: int = 255) -> str:
@@ -84,10 +117,10 @@ class TopnState:
         self.counters = counters
 
     def _prune(self, keep: int) -> None:
-        if keep >= len(self.counts):
-            return
-        top = sorted(self.counts.items(), key=lambda kv: (-kv[1], kv[0]))[:keep]
-        self.counts = dict(top)
+        # eviction ranks the EXACT totals (see clamp64); only the final
+        # pack saturates first
+        if keep < len(self.counts):
+            self.counts = _rank_cut(self.counts.items(), keep)
 
     def add(self, item: str, amount: int = 1, *, aggregate_path: bool = True) -> None:
         """Upsert + conditional prune. aggregate_path=True is the
@@ -108,9 +141,8 @@ class TopnState:
             self.counts[item] = cur + amount
 
     def finalize(self) -> dict[str, int]:
-        """topn_pack: prune to counters (topn.c:652)."""
-        self._prune(self.counters)
-        return self.counts
+        """topn_pack: :func:`pack_counts` to counters (topn.c:652)."""
+        return pack_counts(self.counts, self.counters)
 
 
 def weight_to_long(w) -> int:
@@ -128,8 +160,9 @@ def weight_to_long(w) -> int:
     wf = float(w)
     if math.isinf(wf) or abs(wf) >= 9.3e18:
         return INT64_MAX if wf > 0 else -INT64_MAX - 1
-    wv = int(Decimal(repr(wf)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
-    return max(min(wv, INT64_MAX), -INT64_MAX - 1)
+    return clamp64(
+        int(Decimal(repr(wf)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+    )
 
 
 def weights_to_long_vec(a) -> "np.ndarray":
@@ -158,24 +191,27 @@ def weights_to_long_vec(a) -> "np.ndarray":
     return out
 
 
+def _group_keys(group_cols: Sequence[Column | str]):
+    """The caller's group columns as ``(names, exprs)`` aliased
+    ``__g{i}``. A global aggregate rides an internal constant ``__gall``
+    key instead: ``applyInPandas`` and ``applyInPandasWithState`` need a
+    grouping key, and callers drop it again."""
+    if not group_cols:
+        return ["__gall"], [F.lit(1).alias("__gall")]
+    gnames = [f"__g{i}" for i in range(len(group_cols))]
+    return gnames, [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
+
+
 def _group_ddl(df: DataFrame, gnames: Sequence[str]) -> str:
     fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     ddl = ", ".join(f"{g} {fields[g]}" for g in gnames)
     return ddl + ", " if ddl else ""
 
 
-def _merge_fn(
-    gnames: Sequence[str],
-    counters: int,
-    out_json: str,
-    *,
-    drop_nonpositive: bool = False,
-):
-    """Phase-2 reducer: MergeTopn over partial entries, final prune,
-    JSON materialization (the reference also materializes through a JSON
-    string, topn.c:914-939). drop_nonpositive applies the weighted
-    aggregate's "total weight <= 0 is not a heavy hitter" rule after
-    the merge (aggregates.py topn_weighted_agg semantics)."""
+def _merge_fn(gnames: Sequence[str], counters: int, *, drop_nonpositive: bool):
+    """Phase-2 reducer: MergeTopn over partial entries, then
+    :func:`pack_counts`. drop_nonpositive applies the weighted
+    aggregate's "total weight <= 0 is not a heavy hitter" rule."""
 
     def merge_keyed(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         st = TopnState(counters)
@@ -183,13 +219,10 @@ def _merge_fn(
         live = live.sort_values(["__freq", "__item"], ascending=[False, True])
         for it, freq in zip(live["__item"], live["__freq"]):
             st.add(it, int(freq), aggregate_path=True)
-        # single egress clamp (see clamp64) — sign is preserved, so the
-        # nonpositive drop is clamp-order independent
-        out = {k: clamp64(v) for k, v in st.finalize().items()}
-        if drop_nonpositive:
-            out = {k: v for k, v in out.items() if v > 0}
         row = dict(zip(gnames, key))
-        row[out_json] = json.dumps(out)
+        row["__sketch"] = pack_counts(
+            st.counts, counters, drop_nonpositive=drop_nonpositive
+        )
         return pd.DataFrame([row])
 
     return merge_keyed
@@ -269,8 +302,8 @@ def _decimal_ride_keys(src: DataFrame, gnames: Sequence[str]):
     Why: a nullable int64 Arrow column coerces to FLOAT64 in pandas, so
     an integral group key above 2^53 sharing an input partition with
     NULL keys would come back with its low bits rounded off (the same
-    coercion class as the union-path __freq fix above). decimal(20,0)
-    arrives as exact Python Decimal whatever the null mix; _pack casts
+    coercion class as topn_union_agg_sketch's __freq rule). decimal(20,0)
+    arrives as exact Python Decimal whatever the null mix; _merge casts
     the survivors back to the original type."""
     from pyspark.sql import types as T
 
@@ -286,24 +319,77 @@ def _decimal_ride_keys(src: DataFrame, gnames: Sequence[str]):
     return out, restore
 
 
-def _pack(
-    merged: DataFrame,
+def _merge(
+    entries: DataFrame,
     df: DataFrame,
-    group_cols,
-    gnames,
+    group_cols: Sequence[Column | str],
+    gnames: Sequence[str],
+    counters: int,
     out_col: str,
     restore: "dict[str, str] | None" = None,
+    drop_nonpositive: bool = False,
 ) -> DataFrame:
-    def name_of(c):
-        return c if isinstance(c, str) else df.select(_col(c)).columns[0]
-
-    def gcol(g):
-        c = F.col(g)
-        return c.cast(restore[g]) if restore and g in restore else c
-
+    """Phase 2 over ``gnames + (__item, __freq)`` entry rows: shuffle on
+    the group keys, merge and pack each group into a sketch map, restore
+    the caller's names and (``restore``) integral key types."""
+    merged = entries.groupBy(*gnames).applyInPandas(
+        _merge_fn(gnames, counters, drop_nonpositive=drop_nonpositive),
+        schema=_group_ddl(entries, gnames) + "__sketch map<string,bigint>",
+    )
+    restore = restore or {}
     return merged.select(
-        *[gcol(g).alias(name_of(c)) for g, c in zip(gnames, group_cols)],
-        F.from_json(F.col(f"__{out_col}_json"), "map<string,bigint>").alias(out_col),
+        *[
+            (F.col(g).cast(restore[g]) if g in restore else F.col(g)).alias(n)
+            for g, n in zip(gnames, _caller_names(df, group_cols))
+        ],
+        F.col("__sketch").alias(out_col),
+    )
+
+
+def _item_agg_sketch(
+    df: DataFrame,
+    group_cols: Sequence[Column | str],
+    item: Column | str,
+    weight: Column | str | None,
+    counters: int | None,
+    out_col: str,
+    spread: bool,
+) -> DataFrame:
+    """The Tier-2 item aggregate behind :func:`topn_add_agg_sketch`
+    (``weight=None``) and :func:`topn_weighted_agg_sketch`."""
+    counters = resolve_counters(counters, df.sparkSession)
+    weighted = weight is not None
+    gnames, gexprs = _group_keys(group_cols)
+    src = df.select(
+        *gexprs,
+        _col(item).cast("string").alias("__item"),
+        *([_col(weight).cast("double").alias("__w")] if weighted else []),
+    )
+    # the mapInPandas partial runs at the input's partitioning — spread
+    # a starved single-file scan so the Tier-1-style partial pass uses
+    # the whole cluster (no-op when the scan already splits).
+    # `spread=False` opts out for callers that fan MANY lanes over the
+    # same small source in one query: each lane's projection differs,
+    # so the per-lane repartition exchanges don't dedupe and cost more
+    # than the starved partial saves (measured on topn_tier2_eviction).
+    if spread:
+        from postgresql_topn_spark.operators.dedup import spread_small_scan
+
+        src = spread_small_scan(df, src)
+    src, restore = _decimal_ride_keys(src, gnames)
+    # weighted partials ride decimal(38,0), not bigint: totals stay EXACT
+    # across the shuffle so the int64 saturation happens exactly once,
+    # in the merge's pack — two near-max same-sign partials would
+    # otherwise clamp per partition and make the merged total depend on
+    # partition arrival (review pin). 38 digits hold any realistic sum
+    # of int64 terms.
+    freq_type = "decimal(38,0)" if weighted else "bigint"
+    partial_df = src.mapInPandas(
+        _partial_fn(gnames, counters, weighted=weighted),
+        schema=_group_ddl(src, gnames) + f"__item string, __freq {freq_type}",
+    )
+    return _merge(
+        partial_df, df, group_cols, gnames, counters, out_col, restore, weighted
     )
 
 
@@ -323,38 +409,7 @@ def topn_add_agg_sketch(
     items are skipped (topn.c:424-427); groups with only NULL items
     still emit ``{}``.
     """
-    counters = resolve_counters(counters, df.sparkSession)
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    gexprs = [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
-    if not gnames:
-        # global aggregate: applyInPandas needs a grouping key, so ride
-        # an internal constant one (dropped again by _pack)
-        gnames, gexprs = ["__gall"], [F.lit(1).alias("__gall")]
-    src = df.select(
-        *gexprs,
-        _col(item).cast("string").alias("__item"),
-    )
-    # the mapInPandas partial runs at the input's partitioning — spread
-    # a starved single-file scan so the Tier-1-style partial pass uses
-    # the whole cluster (no-op when the scan already splits).
-    # `spread=False` opts out for callers that fan MANY lanes over the
-    # same small source in one query: each lane's projection differs,
-    # so the per-lane repartition exchanges don't dedupe and cost more
-    # than the starved partial saves (measured on topn_tier2_eviction).
-    if spread:
-        from postgresql_topn_spark.operators.dedup import spread_small_scan
-
-        src = spread_small_scan(df, src)
-    src, restore = _decimal_ride_keys(src, gnames)
-    mid_schema = _group_ddl(src, gnames) + "__item string, __freq bigint"
-    partial_df = src.mapInPandas(
-        _partial_fn(gnames, counters, weighted=False), schema=mid_schema
-    )
-    final_schema = _group_ddl(src, gnames) + f"__{out_col}_json string"
-    merged = partial_df.groupBy(*gnames).applyInPandas(
-        _merge_fn(gnames, counters, f"__{out_col}_json"), schema=final_schema
-    )
-    return _pack(merged, df, group_cols, gnames, out_col, restore)
+    return _item_agg_sketch(df, group_cols, item, None, counters, out_col, spread)
 
 
 def topn_weighted_agg_sketch(
@@ -382,41 +437,7 @@ def topn_weighted_agg_sketch(
 
     NULL items are skipped (group still emits {}); zero-valued weights
     add nothing and do not create entries."""
-    counters = resolve_counters(counters, df.sparkSession)
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    gexprs = [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
-    if not gnames:
-        gnames, gexprs = ["__gall"], [F.lit(1).alias("__gall")]
-    src = df.select(
-        *gexprs,
-        _col(item).cast("string").alias("__item"),
-        _col(weight).cast("double").alias("__w"),
-    )
-    # same starved-scan spread (and opt-out rationale) as
-    # topn_add_agg_sketch
-    if spread:
-        from postgresql_topn_spark.operators.dedup import spread_small_scan
-
-        src = spread_small_scan(df, src)
-    src, restore = _decimal_ride_keys(src, gnames)
-    # decimal(38,0), not bigint: partial totals stay EXACT across the
-    # shuffle so the int64 saturation happens exactly once, at the
-    # merge's JSON egress — two near-max same-sign partials would
-    # otherwise clamp per partition and make the merged total depend on
-    # partition arrival (review pin). 38 digits hold any realistic sum
-    # of int64 terms.
-    mid_schema = _group_ddl(src, gnames) + "__item string, __freq decimal(38,0)"
-    partial_df = src.mapInPandas(
-        _partial_fn(gnames, counters, weighted=True), schema=mid_schema
-    )
-    final_schema = _group_ddl(src, gnames) + f"__{out_col}_json string"
-    merged = partial_df.groupBy(*gnames).applyInPandas(
-        _merge_fn(
-            gnames, counters, f"__{out_col}_json", drop_nonpositive=True
-        ),
-        schema=final_schema,
-    )
-    return _pack(merged, df, group_cols, gnames, out_col, restore)
+    return _item_agg_sketch(df, group_cols, item, weight, counters, out_col, spread)
 
 
 def topn_union_agg_sketch(
@@ -431,10 +452,7 @@ def topn_union_agg_sketch(
     group under the MergeTopn prune policy (topn.c:955-990). NULL
     sketches are skipped (topn.c:489); all-NULL groups yield {}."""
     counters = resolve_counters(counters, df.sparkSession)
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    gexprs = [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
-    if not gnames:
-        gnames, gexprs = ["__gall"], [F.lit(1).alias("__gall")]
+    gnames, gexprs = _group_keys(group_cols)
     # __freq rides as decimal(38,0), NOT bigint: explode_outer's NULL
     # marker rows (NULL/empty sketches keeping their group alive) make
     # the column nullable, and Arrow->pandas coerces nullable int64 to
@@ -448,8 +466,4 @@ def topn_union_agg_sketch(
         *gexprs,
         F.explode_outer(_col(sketch)).alias("__item", "__freq"),
     ).withColumn("__freq", F.col("__freq").cast("decimal(38,0)"))
-    final_schema = _group_ddl(exploded, gnames) + f"__{out_col}_json string"
-    merged = exploded.groupBy(*gnames).applyInPandas(
-        _merge_fn(gnames, counters, f"__{out_col}_json"), schema=final_schema
-    )
-    return _pack(merged, df, group_cols, gnames, out_col)
+    return _merge(exploded, df, group_cols, gnames, counters, out_col)

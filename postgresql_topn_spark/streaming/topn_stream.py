@@ -11,12 +11,15 @@ provide both shapes:
    key, updated each micro-batch, emitting the refreshed sketch in
    update mode. State per key is <= 3 x counters entries regardless of
    stream cardinality — the reference's bounded-memory contract carried
-   over to unbounded data.
+   over to unbounded data. Each emitted snapshot finishes through
+   ``sketch_state.pack_counts`` like every batch Python lane: totals
+   saturate into int64 before they are ranked and cut.
 
 2. :func:`stream_topn_rollup` — the rollup-table pattern itself:
    ``foreachBatch`` computes batch-local sketches with the (exact,
    Catalyst-native) Tier-1 aggregate and *appends* them to a parquet
-   rollup; :func:`read_topn_rollup` re-merges at read time with
+   rollup as ``sketch_to_json`` text, the batch rollup writers' jsonb
+   key order; :func:`read_topn_rollup` re-merges at read time with
    ``topn_union_agg``. Append-only writes scale (no read-modify-write
    races, partition-pruned reads by event date), and merging sketch
    deltas is associative so late batches just add rows.
@@ -28,6 +31,7 @@ struct is just another group column.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
@@ -37,11 +41,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from postgresql_topn_spark.conf import STREAM_PARTITION_BYTES, knob, resolve_counters
-from postgresql_topn_spark.functions.sketch import _col
+from postgresql_topn_spark.functions.sketch import _col, sketch_to_json
 from postgresql_topn_spark.operators.sketch_state import (
     TopnState,
     _group_ddl,
+    _group_keys,
     clamp64,
+    pack_counts,
     truncate_key_bytes,
     weight_to_long,
 )
@@ -77,12 +83,7 @@ def topn_streaming_state(
     """
     counters = resolve_counters(counters, stream_df.sparkSession)
     weighted = weight is not None
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    gexprs = [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
-    if not gnames:
-        # applyInPandasWithState needs a grouping key: ride an internal
-        # constant one, dropped again below (the batch twin's shape)
-        gnames, gexprs = ["__gall"], [F.lit(1).alias("__gall")]
+    gnames, gexprs = _group_keys(group_cols)
     w_col = (
         _col(weight).cast("double") if weighted else F.lit(1).cast("double")
     )
@@ -122,18 +123,11 @@ def topn_streaming_state(
         # matters there, arrival order is real here)
         st.counts = {k: clamp64(int(v)) for k, v in st.counts.items()}
         state.update((list(st.counts.keys()), [int(v) for v in st.counts.values()]))
-        import json as _json
-
         # non-positive totals are not heavy hitters (matches
         # topn_weighted_agg's drop rule; counted items are always >= 1)
-        snapshot = dict(
-            sorted(
-                ((k, v) for k, v in st.counts.items() if v > 0),
-                key=lambda kv: (-kv[1], kv[0]),
-            )[: st.counters]
-        )
+        snapshot = pack_counts(st.counts, counters, drop_nonpositive=True)
         row = dict(zip(gnames, key))
-        row[out_col] = _json.dumps(snapshot)
+        row[out_col] = json.dumps(snapshot)
         yield pd.DataFrame([row])
 
     out = src.groupBy(*gnames).applyInPandasWithState(
@@ -143,7 +137,7 @@ def topn_streaming_state(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return out.drop("__gall") if gnames == ["__gall"] else out
+    return out if group_cols else out.drop("__gall")
 
 
 def _run_id(checkpoint: "str | None") -> str:
@@ -347,9 +341,10 @@ def stream_topn_rollup(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         sk = topn_add_agg(batch_df, group_cols, item, counters=counters, out_col=out_col)
-        # sketches at rest as JSON text: parquet-friendly, engine-portable
+        # sketches at rest as JSON text (parquet-friendly, engine-portable)
+        # in the reference's jsonb key order, like the batch rollup writers
         _replay_safe_append(
-            sk.withColumn(out_col, F.to_json(F.col(out_col))),
+            sk.withColumn(out_col, sketch_to_json(F.col(out_col))),
             rollup_path,
             rid,
             batch_id,
@@ -588,12 +583,7 @@ def kmv_streaming_state(
     sketch over the same rows — pinned in tests/test_streaming.py."""
     import hashlib
 
-    gnames = [f"__g{i}" for i in range(len(group_cols))]
-    gexprs = [_col(c).alias(g) for c, g in zip(group_cols, gnames)]
-    if not gnames:
-        # applyInPandasWithState needs a grouping key: ride an internal
-        # constant one, dropped again below (global-aggregate shape)
-        gnames, gexprs = ["__gall"], [F.lit(1).alias("__gall")]
+    gnames, gexprs = _group_keys(group_cols)
     src = stream_df.select(
         *gexprs,
         _col(item).cast("string").alias("__item"),
@@ -625,7 +615,7 @@ def kmv_streaming_state(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return out.drop("__gall") if gnames == ["__gall"] else out
+    return out if group_cols else out.drop("__gall")
 
 
 def stream_bloom_dedup(

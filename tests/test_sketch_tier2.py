@@ -522,3 +522,94 @@ def test_union_invariants_under_eviction(spark):
     assert all(v <= truth[k] for k, v in out[1].items())
     assert out[1]["hot"] == truth["hot"]
     assert out[2] == {"a": 12, "b": 4}
+
+
+def test_saturate_then_rank_parity_at_int64_edge(spark):
+    """Every lane saturates a total into int64 BEFORE it ranks, as the
+    reference saturates on each add (topn.c:997-1009) before
+    PruneHashTable ranks (topn.c:869-908). With counters=1 the exact
+    totals INT64_MAX+5 ('a') and INT64_MAX+10 ('b') both saturate to
+    INT64_MAX and tie, so 'a' (item ASC) is kept — on the Tier-1
+    aggregates, the registered UDAFs and the Tier-2 sketches alike.
+    No eviction fires: 2 items against a transient limit of 3."""
+    from postgresql_topn_spark.functions.aggregates import (
+        topn_union_agg,
+        topn_weighted_agg,
+    )
+    from postgresql_topn_spark.functions.sql_api import register_sql_functions
+    from postgresql_topn_spark.operators.sketch_state import (
+        topn_weighted_agg_sketch,
+    )
+
+    i64 = (1 << 63) - 1
+    want = [{"a": i64}]
+    rows = spark.createDataFrame(
+        [("g", "a", i64), ("g", "a", 5), ("g", "b", i64), ("g", "b", 10)],
+        "g string, item string, w bigint",
+    )
+    sketches = spark.createDataFrame(
+        [("g", {"a": i64}), ("g", {"a": 5}), ("g", {"b": i64}), ("g", {"b": 10})],
+        "g string, sk map<string,bigint>",
+    )
+
+    def maps(df):
+        return [dict(r["topn"]) for r in df.collect()]
+
+    session = spark.newSession()  # keep the 1-counter registration local
+    register_sql_functions(session, counters=1)
+    session.createDataFrame(rows.collect(), rows.schema).createOrReplaceTempView("w_rows")
+    session.createDataFrame(sketches.collect(), sketches.schema).createOrReplaceTempView(
+        "u_rows"
+    )
+    got = {
+        "weighted": maps(topn_weighted_agg(rows, ["g"], "item", "w", counters=1)),
+        "weighted udaf": maps(
+            session.sql("SELECT topn_weighted_agg(item, w) AS topn FROM w_rows GROUP BY g")
+        ),
+        "weighted sketch": maps(
+            topn_weighted_agg_sketch(rows, ["g"], "item", "w", counters=1)
+        ),
+        "union": maps(topn_union_agg(sketches, ["g"], "sk", counters=1)),
+        "union udaf": maps(
+            session.sql("SELECT topn_union_agg(sk) AS topn FROM u_rows GROUP BY g")
+        ),
+        "union sketch": maps(topn_union_agg_sketch(sketches, ["g"], "sk", counters=1)),
+    }
+    assert got == dict.fromkeys(got, want)
+
+
+def test_python_rank_and_clamp_written_once():
+    """The Python lanes saturate, rank and cut through one function:
+    the int64 clamp lives in sketch_state.clamp64 and the (frequency
+    DESC, item ASC) rank key in the rank-and-cut that pack_counts and
+    the eviction prune share. No module under functions/, operators/ or
+    streaming/ may carry a copy of either."""
+    import ast
+    import pathlib
+
+    import postgresql_topn_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    home = {"-kv[1]": "_rank_cut", "max(min(": "clamp64"}
+    seen = 0
+    for path in sorted(
+        p for d in ("functions", "operators", "streaming") for p in (root / d).glob("*.py")
+    ):
+        src = path.read_text()
+        if path.name == "sketch_state.py":
+            lines = src.splitlines(keepends=True)
+            fns = {
+                n.name: n for n in ast.parse(src).body if isinstance(n, ast.FunctionDef)
+            }
+            for pat, name in home.items():
+                fn = fns[name]
+                body = "".join("".join(lines[fn.lineno - 1 : fn.end_lineno]).split())
+                assert pat in body, f"{name} lost its {pat}"
+            for fn in sorted((fns[n] for n in home.values()), key=lambda f: -f.lineno):
+                lines[fn.lineno - 1 : fn.end_lineno] = []
+            src = "".join(lines)
+        flat = "".join(src.split())
+        for pat in home:
+            assert pat not in flat, f"{path.name} carries its own {pat}"
+        seen += 1
+    assert seen > 20

@@ -1114,3 +1114,21 @@ def test_rank_and_pack_written_once():
         assert pack not in flat, f"{path.name} carries its own sketch pack"
         seen += 1
     assert seen > 5
+
+
+def test_norm_expr_backslash_escape_keeps_literal_case():
+    """The GROUP BY matcher skips quoted spans with the same escape rule
+    as the clause scanner (outside backticks a backslash escapes the
+    next character), so case folding never reaches inside 'a\\'B'. The
+    statement below groups by a different literal than it selects, which
+    Spark rejects (MISSING_AGGREGATION); the rewriter must decline it
+    rather than group on the select key."""
+    from postgresql_topn_spark.functions.sql_api import rewrite_topn_sql
+
+    sql = (
+        "SELECT concat(g, 'a\\'B') AS k, topn_add_agg(x) AS t FROM src "
+        "GROUP BY concat(g, 'a\\'b')"
+    )
+    assert rewrite_topn_sql(sql, counters=10) is None
+    # the same statement with matching literals still rewrites
+    assert rewrite_topn_sql(sql.replace("'a\\'b'", "'a\\'B'"), counters=10)

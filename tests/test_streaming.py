@@ -1019,3 +1019,32 @@ def test_adaptive_stream_partitions_scales_with_source_bytes(
         ) == int(cap)
     finally:
         spark.conf.unset(_STATE_PARTITION_BYTES_CONF)
+
+
+def test_stream_rollup_text_matches_batch_writer(spark, tmp_path):
+    """Stream-built and batch-built rollups store the same sketch text:
+    both render with sketch_to_json (the reference's jsonb key order,
+    shorter keys first), not the map's (frequency DESC) entry order."""
+    from postgresql_topn_spark.sources.rollup import write_topn_rollup
+
+    src = str(tmp_path / "src")
+    df = spark.createDataFrame([("d", "bb"), ("d", "bb"), ("d", "a")], "day string, item string")
+    df.write.parquet(src)
+    batch = str(tmp_path / "batch_rollup")
+    write_topn_rollup(df, batch, "day", "item", counters=10)
+    stream_rollup = str(tmp_path / "stream_rollup")
+    q = stream_topn_rollup(
+        spark.readStream.schema(df.schema).parquet(src),
+        ["day"],
+        "item",
+        rollup_path=stream_rollup,
+        checkpoint_path=str(tmp_path / "ckpt_text"),
+        counters=10,
+        trigger_available_now=True,
+    )
+    q.awaitTermination(120)
+    texts = [
+        [r["topn"] for r in spark.read.parquet(p).select("topn").collect()]
+        for p in (batch, stream_rollup)
+    ]
+    assert texts == [['{"a":1,"bb":2}'], ['{"a":1,"bb":2}']]
