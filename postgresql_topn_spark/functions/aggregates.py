@@ -358,11 +358,22 @@ def _run(
 
 def _caller_names(df: DataFrame, group_cols: Sequence[Column | str]) -> list[str]:
     """Output names of *group_cols* over *df*: string group cols name
-    themselves; Column expressions are resolved in ONE batched select
-    (one analysis round-trip, not one per col)."""
+    themselves, unquoted as Spark names them (:func:`_unquoted`); Column
+    expressions are resolved in ONE batched select (one analysis
+    round-trip, not one per col)."""
     col_objs = [_col(c) for c in group_cols if not isinstance(c, str)]
     resolved = iter(df.select(*col_objs).columns if col_objs else ())
-    return [c if isinstance(c, str) else next(resolved) for c in group_cols]
+    return [_unquoted(c) if isinstance(c, str) else next(resolved) for c in group_cols]
+
+
+def _unquoted(name: str) -> str:
+    """A fully backtick-quoted identifier named as Spark names it
+    (``"`a.b`"`` -> ``a.b``, a doubled backtick -> one); anything else,
+    an unquoted dotted string included, as given."""
+    inner = name[1:-1]
+    if len(name) > 1 and name[0] == name[-1] == "`" and "`" not in inner.replace("``", ""):
+        return inner.replace("``", "`")
+    return name
 
 
 def _project(
@@ -599,4 +610,6 @@ def topn_add_agg_grouping_sets(
     text = _rank_pack_sql(
         "SELECT * FROM {src}", ["__gid", *gnames], counters, "topn"
     )
-    return df.sparkSession.sql(text, src=counted).toDF(gid_col, *universe, out_col)
+    return df.sparkSession.sql(text, src=counted).toDF(
+        gid_col, *_caller_names(df, universe), out_col
+    )

@@ -43,6 +43,14 @@ O(groups x counters) pre-reduced pairs. Merge order is made
 deterministic (frequency DESC, item ASC) so eviction decisions do not
 depend on shuffle arrival order — the reference is order-dependent and
 nondeterministic here; we pin determinism as a documented deviation.
+
+Under eviction the answer depends on how many partial states phase 1
+fans out to, which ``spread_small_scan`` sets to ``defaultParallelism``:
+dropping that spread on perfbench ``bounded``'s 40k-row batches cut CPU
+per op from 2,069 to 1,311 ms but took top-k recall from 1.0 to 0.969
+and the mean relative frequency error from 0.0104 to 0.0137, so a floor
+on work per Python task must leave this fan-out alone or show accuracy
+holds.
 """
 
 from __future__ import annotations

@@ -5,20 +5,89 @@ dashboard top-n by merging only the requested interval's rows.
 
 Spark-first materialization: a parquet table **partitioned by the time
 bucket**, sketch stored as JSON text (engine-portable, like the
-reference's at-rest JSONB). Interval queries prune to the matching
-partitions before any row is read — at 100 TB of history the read cost
-is proportional to the interval, not the history.
+reference's at-rest JSONB). The readers resolve a rollup path to an
+external table of the session catalog (``CREATE TABLE … USING parquet
+LOCATION``, then ``RECOVER PARTITIONS``), the reference's
+``UNIQUE(review_date)`` index: an interval filter prunes buckets in the
+catalog before any file is listed, so a read costs the interval, not the
+history (a path read rediscovers every bucket, as a listing job above 32).
+
+Freshness: a read sees the files on disk at call time, whoever wrote
+them. Each read lists the bucket directories once; when they differ
+from the registered set the table is registered again (DROP, CREATE,
+RECOVER, which also re-infers the schema), otherwise it is refreshed
+(``REFRESH TABLE``), so the query lists only the buckets it prunes to.
+Writers need no hook. The tables live in the reserved database
+``topn_rollups``, one per qualified path; dropping one never deletes
+data (EXTERNAL). Under a Hive catalog that database persists.
 """
 
 from __future__ import annotations
 
+import hashlib
+import threading
+import weakref
 from collections.abc import Sequence
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from postgresql_topn_spark.functions.aggregates import topn_add_agg, topn_union_agg
 from postgresql_topn_spark.functions.sketch import sketch_to_json
+from postgresql_topn_spark.sources.tables import _jclass, child_dirs
+
+_DB = "spark_catalog.topn_rollups"
+_LOCK = threading.Lock()
+# per SparkContext (one catalog each): table -> (depth, bucket dirs) registered
+_REGISTERED: "weakref.WeakKeyDictionary[SparkContext, dict[str, tuple[int, frozenset[str]]]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _partition_dirs(spark: SparkSession, path: str) -> list[str]:
+    # the directories Spark's partition discovery descends into
+    return [n for n in child_dirs(spark, path) if "=" in n and not n.startswith(".")]
+
+
+def _bucket_tree(
+    spark: SparkSession, root: str, depth: int | None
+) -> tuple[int, frozenset[str]]:
+    """The partition directories *depth* levels under *root*, as relative
+    paths: one listing per directory above that level. An unknown depth
+    is found by following the first directory down."""
+    if depth is None:
+        depth, probe = 0, root
+        while kids := _partition_dirs(spark, probe):
+            depth, probe = depth + 1, f"{probe}/{kids[0]}"
+    level = [""]
+    for _ in range(depth):
+        level = [f"{rel}{n}/" for rel in level for n in _partition_dirs(spark, root + "/" + rel)]
+    return depth, frozenset(level)
+
+
+def _rollup_table(spark: SparkSession, path: str) -> DataFrame:
+    """*path* as an external table of the session catalog, as fresh as
+    the files on disk (see the module docstring). Fails with
+    FileNotFoundError naming the qualified *path* when it does not
+    exist."""
+    jpath = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    where = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(jpath).toString()
+    name = f"{_DB}.r{hashlib.sha256(where.encode()).hexdigest()[:32]}"
+    with _LOCK:
+        registered = _REGISTERED.setdefault(spark.sparkContext, {})
+        depth, dirs = registered.get(name, (None, None))
+        depth, now = _bucket_tree(spark, where, depth)
+        if now == dirs:
+            spark.catalog.refreshTable(name)
+        else:
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {_DB}")
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            spark.catalog.createTable(name, path=where, source="parquet")
+            if depth:
+                spark.catalog.recoverPartitions(name)
+            registered[name] = (depth, now)
+        return spark.table(name)
 
 
 def write_topn_rollup(
@@ -56,15 +125,17 @@ def read_topn_rollup(
     *,
     bucket_name: str = "bucket",
 ) -> DataFrame:
-    """Load a rollup table with the sketch column re-typed. Filters on
-    the bucket column prune partitions (verify with .explain:
-    PartitionFilters).
+    """Load a rollup table with the sketch column re-typed. The path
+    resolves to a catalog table (module docstring: freshness rule,
+    reserved database), so a filter on the bucket column prunes buckets
+    before any file is listed: the plan reads
+    ``InMemoryFileIndex(1 paths)`` for a one-bucket interval.
 
     ``bucket_name`` must match the name the rollup was written with —
     it is validated against the on-disk partition column so a mismatch
     fails here, at load, instead of as a missing-column error in the
     first downstream interval filter."""
-    df = spark.read.parquet(path)
+    df = _rollup_table(spark, path)
     if bucket_name not in df.columns:
         raise ValueError(
             f"rollup at {path} has no bucket column {bucket_name!r}; "
@@ -108,10 +179,12 @@ def read_sketch_rollup(
     partition_names: Sequence[str],
 ) -> DataFrame:
     """Load a sketch rollup; validates the partition grain so a
-    mismatch fails at load, not in the first downstream filter.
-    Filters on the partition columns prune to the interval's files
-    (PartitionFilters — asserted in tests/test_rollup.py)."""
-    df = spark.read.parquet(path)
+    mismatch fails at load, not in the first downstream filter. The
+    path resolves to a catalog table as in :func:`read_topn_rollup`, so
+    filters on the partition columns prune in the catalog before any
+    file is listed; a new partition at any level of a multi-level grain
+    is visible on the next read."""
+    df = _rollup_table(spark, path)
     missing = [c for c in partition_names if c not in df.columns]
     if missing:
         raise ValueError(

@@ -12,7 +12,7 @@ import functools
 import os
 from urllib.parse import urlparse
 
-from py4j.protocol import Py4JError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
@@ -123,6 +123,30 @@ def input_bytes(
         return total if source else None
     except (Py4JError, PySparkException):  # unreadable file or path
         return None
+
+
+def child_dirs(spark: SparkSession, path: str) -> list[str]:
+    """Names of the directories directly under *path*: one Hadoop
+    ``listStatus``, so any scheme works. A qualified local path
+    (``file:/…``, as ``FileSystem.makeQualified`` prints it) takes an
+    os.scandir shortcut: the same names, without the three py4j round
+    trips per entry (~30 ms for 90 entries). Raises FileNotFoundError
+    naming *path* when it does not exist."""
+    if path.startswith("file:/") and not path.startswith("file://"):
+        try:
+            with os.scandir(path[len("file:"):]) as entries:
+                return [e.name for e in entries if e.is_dir()]
+        except (FileNotFoundError, NotADirectoryError):
+            raise FileNotFoundError(f"no directory at {path}") from None
+    jpath = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    try:
+        statuses = fs.listStatus(jpath)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            raise FileNotFoundError(f"no directory at {path}") from None
+        raise
+    return [st.getPath().getName() for st in statuses if st.isDirectory()]
 
 
 # The reference's flagship CSV schema — 12-column Amazon customer reviews

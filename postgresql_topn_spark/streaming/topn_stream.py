@@ -51,7 +51,7 @@ from postgresql_topn_spark.operators.sketch_state import (
     truncate_key_bytes,
     weight_to_long,
 )
-from postgresql_topn_spark.sources.tables import input_bytes
+from postgresql_topn_spark.sources.tables import child_dirs, input_bytes
 
 
 def topn_streaming_state(
@@ -412,26 +412,21 @@ def read_topn_rollup(
     from postgresql_topn_spark.functions.aggregates import topn_union_agg
 
     if not allow_multiple_runs:
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(rollup_path)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(root):
-            runs = [
-                st.getPath().getName()
-                for st in fs.listStatus(root)
-                if st.getPath().getName().startswith("run_id=")
-            ]
-            if len(runs) > 1:
-                raise ValueError(
-                    f"rollup at {rollup_path} holds {len(runs)} runs "
-                    f"({sorted(runs)[:4]}...): merging across runs "
-                    "double-counts events the runs share (typically a "
-                    "restart without a durable checkpoint replaying the "
-                    "input under a fresh run_id). Keep only the "
-                    "authoritative run's partitions, or pass "
-                    "allow_multiple_runs=True if the runs genuinely "
-                    "hold disjoint inputs."
-                )
+        try:
+            runs = [n for n in child_dirs(spark, rollup_path) if n.startswith("run_id=")]
+        except FileNotFoundError:  # the read below names the missing path
+            runs = []
+        if len(runs) > 1:
+            raise ValueError(
+                f"rollup at {rollup_path} holds {len(runs)} runs "
+                f"({sorted(runs)[:4]}...): merging across runs "
+                "double-counts events the runs share (typically a "
+                "restart without a durable checkpoint replaying the "
+                "input under a fresh run_id). Keep only the "
+                "authoritative run's partitions, or pass "
+                "allow_multiple_runs=True if the runs genuinely "
+                "hold disjoint inputs."
+            )
     raw = spark.read.parquet(rollup_path).withColumn(
         out_col, F.from_json(F.col(out_col), "map<string,bigint>")
     )

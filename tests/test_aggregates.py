@@ -260,7 +260,7 @@ _HOSTILE_CASES = {
         [("s1", {"a": 2, "b": 1}), ("s2", {"a": 1, "c": 1})],
     ),
     "add dotted": (
-        ["`a.b`", "topn"],
+        ["a.b", "topn"],
         [("d1", {"a": 1, "b": 1, "c": 1}), ("d2", {"a": 2})],
     ),
     "add colexpr": (
@@ -281,7 +281,7 @@ _HOSTILE_CASES = {
         [("s1", {"a": 3, "b": 5}), ("s2", {"a": 4, "c": 3})],
     ),
     "weighted dotted": (
-        ["`a.b`", "topn"],
+        ["a.b", "topn"],
         [("d1", {"a": 2, "b": 5, "c": 3}), ("d2", {"a": 5})],
     ),
     "weighted colexpr": (
@@ -302,7 +302,7 @@ _HOSTILE_CASES = {
         [("x", {"a": 1, "b": 1, "c": 1}), ("y", {"a": 2})],
     ),
     "union dotted": (
-        ["`a.b`", "topn"],
+        ["a.b", "topn"],
         [("s1", {"a": 2, "b": 1}), ("s2", {"a": 1, "c": 1})],
     ),
     "union colexpr": (
@@ -331,7 +331,7 @@ _HOSTILE_CASES = {
          (1, "s1", None, {"a": 2, "b": 1}), (1, "s2", None, {"a": 1, "c": 1})],
     ),
     "gs dotted": (
-        ["gid", "`a.b`", "topn"],
+        ["gid", "a.b", "topn"],
         [(0, "d1", {"a": 1, "b": 1, "c": 1}), (0, "d2", {"a": 2}),
          (1, None, {"a": 3, "b": 1, "c": 1})],
     ),
@@ -415,3 +415,17 @@ def test_hostile_caller_names(spark, case):
     assert out.columns == cols
     got = [tuple(dict(v) if isinstance(v, dict) else v for v in r) for r in out.collect()]
     assert sorted(got, key=repr) == sorted(rows, key=repr)
+
+
+def test_quoted_string_group_names_unquote_like_spark(spark):
+    """A fully backtick-quoted string group column is named as Spark
+    names it: the quotes go, a doubled backtick becomes one. Anything
+    else keeps the string as given."""
+    from postgresql_topn_spark.functions.aggregates import _unquoted, topn_add_agg
+
+    df = spark.createDataFrame([("x", "y", "a")], "`a.b` string, `c``d` string, it string")
+    keys = ["`a.b`", "`c``d`"]
+    assert topn_add_agg(df, keys, "it").columns == [*df.select(*keys).columns, "topn"]
+    assert df.select(*keys).columns == ["a.b", "c`d"]
+    for as_given in ("s.b", "`a`.`b`", "```", "`", "plain"):
+        assert _unquoted(as_given) == as_given
