@@ -13,13 +13,29 @@ catalog before any file is listed, so a read costs the interval, not the
 history (a path read rediscovers every bucket, as a listing job above 32).
 
 Freshness: a read sees the files on disk at call time, whoever wrote
-them. Each read lists the bucket directories once; when they differ
-from the registered set the table is registered again (DROP, CREATE,
-RECOVER, which also re-infers the schema), otherwise it is refreshed
-(``REFRESH TABLE``), so the query lists only the buckets it prunes to.
-Writers need no hook. The tables live in the reserved database
-``topn_rollups``, one per qualified path; dropping one never deletes
-data (EXTERNAL). Under a Hive catalog that database persists.
+them. Each read lists the bucket directories once, as deep as the
+registered table's partitioning (on the first read, as deep as the
+caller expects: one level for a topn rollup, the partition names for a
+sketch rollup), and reads the parquet footer of one data file. Then:
+
+- new partition column names or a new data schema (a changed depth
+  shows as one or the other), or no bucket left of those registered (an
+  overwrite), registers the table again: DROP, CREATE (which re-infers
+  the schema, the partition columns and their types), RECOVER;
+- other added or removed buckets run ``REPAIR TABLE … SYNC PARTITIONS``,
+  so the table and its other buckets stay visible to frames that
+  earlier reads returned while they run;
+- otherwise ``REFRESH TABLE``, so the query lists only the buckets it
+  prunes to.
+
+Writers need no hook. Appended buckets take the registered partition
+column type. The tables live in the reserved database ``topn_rollups``,
+one per qualified path; dropping one never deletes data (EXTERNAL).
+Under a Hive catalog that database persists. The first read in an
+application creates that database, so the warehouse directory
+(``spark.sql.warehouse.dir``) must be writable. The refresh of each
+read also drops the cached data of any persisted frame built on an
+earlier read of the same rollup; it is recomputed on its next use.
 """
 
 from __future__ import annotations
@@ -39,54 +55,78 @@ from postgresql_topn_spark.sources.tables import _jclass, child_dirs
 
 _DB = "spark_catalog.topn_rollups"
 _LOCK = threading.Lock()
-# per SparkContext (one catalog each): table -> (depth, bucket dirs) registered
-_REGISTERED: "weakref.WeakKeyDictionary[SparkContext, dict[str, tuple[int, frozenset[str]]]]" = (
+# per SparkContext (one catalog each): table -> (depth, bucket dirs, data schema) registered
+_Registration = tuple[int, frozenset[str], "str | None"]
+_REGISTERED: "weakref.WeakKeyDictionary[SparkContext, dict[str, _Registration]]" = (
     weakref.WeakKeyDictionary()
 )
 
 
-def _partition_dirs(spark: SparkSession, path: str) -> list[str]:
-    # the directories Spark's partition discovery descends into
-    return [n for n in child_dirs(spark, path) if "=" in n and not n.startswith(".")]
-
-
-def _bucket_tree(
-    spark: SparkSession, root: str, depth: int | None
-) -> tuple[int, frozenset[str]]:
+def _bucket_dirs(spark: SparkSession, root: str, depth: int) -> frozenset[str]:
     """The partition directories *depth* levels under *root*, as relative
-    paths: one listing per directory above that level. An unknown depth
-    is found by following the first directory down."""
-    if depth is None:
-        depth, probe = 0, root
-        while kids := _partition_dirs(spark, probe):
-            depth, probe = depth + 1, f"{probe}/{kids[0]}"
+    paths (``k=v/…/``): one listing per directory above that level."""
     level = [""]
     for _ in range(depth):
-        level = [f"{rel}{n}/" for rel in level for n in _partition_dirs(spark, root + "/" + rel)]
-    return depth, frozenset(level)
+        level = [
+            f"{rel}{n}/"
+            for rel in level
+            for n in child_dirs(spark, root + "/" + rel)
+            if "=" in n and not n.startswith(".")
+        ]
+    return frozenset(level)
 
 
-def _rollup_table(spark: SparkSession, path: str) -> DataFrame:
+def _grain(dirs: frozenset[str]) -> frozenset[tuple[str, ...]]:
+    # the partition column names along each bucket directory
+    return frozenset(tuple(p.split("=", 1)[0] for p in d.split("/")[:-1]) for d in dirs)
+
+
+def _data_schema(spark: SparkSession, root: str, dirs: frozenset[str]) -> str | None:
+    """The parquet schema in the footer of the first data file of the
+    first bucket: the data columns, which ``REFRESH TABLE`` does not
+    infer again."""
+    if not dirs:
+        return None
+    jvm, conf = spark._jvm, spark._jsc.hadoopConfiguration()
+    leaf = _jclass(jvm, "org.apache.hadoop.fs.Path")(root + "/" + min(dirs))
+    for st in leaf.getFileSystem(conf).listStatus(leaf):
+        f = st.getPath()
+        if st.isFile() and not f.getName().startswith((".", "_")):
+            footer = _jclass(jvm, "org.apache.parquet.hadoop.ParquetFileReader").readFooter(conf, f)
+            return footer.getFileMetaData().getSchema().toString()
+    return None
+
+
+def _rollup_table(spark: SparkSession, path: str, depth: int) -> DataFrame:
     """*path* as an external table of the session catalog, as fresh as
-    the files on disk (see the module docstring). Fails with
-    FileNotFoundError naming the qualified *path* when it does not
-    exist."""
+    the files on disk (see the module docstring). *depth* is the number
+    of partition levels the caller expects; the catalog's own inference
+    overrides it, since a stream rollup read as a topn rollup is
+    partitioned by ``run_id``/``batch_id``. Fails with FileNotFoundError
+    naming the qualified *path* when it does not exist."""
     jpath = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     where = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(jpath).toString()
     name = f"{_DB}.r{hashlib.sha256(where.encode()).hexdigest()[:32]}"
     with _LOCK:
         registered = _REGISTERED.setdefault(spark.sparkContext, {})
-        depth, dirs = registered.get(name, (None, None))
-        depth, now = _bucket_tree(spark, where, depth)
-        if now == dirs:
-            spark.catalog.refreshTable(name)
-        else:
+        depth, old_dirs, old_schema = registered.pop(name, (depth, frozenset(), None))
+        dirs = _bucket_dirs(spark, where, depth)
+        schema = _data_schema(spark, where, dirs)
+        if (_grain(old_dirs), old_schema) != (_grain(dirs), schema) or not old_dirs & dirs:
             spark.sql(f"CREATE DATABASE IF NOT EXISTS {_DB}")
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             spark.catalog.createTable(name, path=where, source="parquet")
-            if depth:
-                spark.catalog.recoverPartitions(name)
-            registered[name] = (depth, now)
+            spark.catalog.recoverPartitions(name)
+            parts = sum(c.isPartition for c in spark.catalog.listColumns(name))
+            if parts != depth:
+                depth = parts
+                dirs = _bucket_dirs(spark, where, depth)
+                schema = _data_schema(spark, where, dirs)
+        elif old_dirs != dirs:
+            spark.sql(f"REPAIR TABLE {name} SYNC PARTITIONS")
+        else:
+            spark.catalog.refreshTable(name)
+        registered[name] = (depth, dirs, schema)
         return spark.table(name)
 
 
@@ -135,7 +175,7 @@ def read_topn_rollup(
     it is validated against the on-disk partition column so a mismatch
     fails here, at load, instead of as a missing-column error in the
     first downstream interval filter."""
-    df = _rollup_table(spark, path)
+    df = _rollup_table(spark, path, 1)
     if bucket_name not in df.columns:
         raise ValueError(
             f"rollup at {path} has no bucket column {bucket_name!r}; "
@@ -184,7 +224,7 @@ def read_sketch_rollup(
     filters on the partition columns prune in the catalog before any
     file is listed; a new partition at any level of a multi-level grain
     is visible on the next read."""
-    df = _rollup_table(spark, path)
+    df = _rollup_table(spark, path, len(partition_names))
     missing = [c for c in partition_names if c not in df.columns]
     if missing:
         raise ValueError(

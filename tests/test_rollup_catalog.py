@@ -9,9 +9,11 @@ import os
 import re
 import shutil
 import sys
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from postgresql_topn_spark.sources.maintenance import compact_topn_rollup
@@ -123,9 +125,11 @@ def test_table_is_external_and_data_survives_reregistration(spark, tmp_path):
     _write_days(spark, path, [1])
     name = _table_of(read_topn_rollup(spark, path, bucket_name="day"))
     assert spark.catalog.getTable(f"{DB}.{name}").tableType == "EXTERNAL"
-    _write_days(spark, path, [2], mode="append")  # a new bucket: DROP, CREATE, RECOVER
-    assert _by_day(spark, path) == {1: {"a": 3, "b": 2}, 2: {"a": 3, "b": 3}}
-    assert sorted(child_dirs(spark, path)) == ["day=1", "day=2"]
+    # no registered bucket is left: DROP, CREATE, RECOVER
+    os.rename(os.path.join(path, "day=1"), os.path.join(path, "day=5"))
+    assert _by_day(spark, path) == {5: {"a": 3, "b": 2}}
+    assert sorted(child_dirs(spark, path)) == ["day=5"]
+    assert any(f.endswith(".parquet") for f in os.listdir(os.path.join(path, "day=5")))
 
 
 def test_table_names_follow_the_qualified_path(spark, tmp_path):
@@ -158,15 +162,62 @@ def test_schema_and_partition_types_match_a_path_read(spark, tmp_path):
     assert sorted(got.collect()) == sorted(spark.read.parquet(path).collect())
 
 
-def test_multi_level_grain_new_inner_partition(spark, tmp_path):
+@pytest.mark.parametrize("grain", [["mon", "shard"], ["mon"]])
+def test_multi_level_grain_new_inner_partition(spark, tmp_path, grain):
+    """Reads list as deep as the catalog partitions the table, also when
+    the caller names only the outer level."""
     path = str(tmp_path / "grain")
     df = spark.createDataFrame([("2024-01", 0, [1])], "mon string, shard int, kmv array<bigint>")
     write_sketch_rollup(df, path, ["mon", "shard"])
-    assert read_sketch_rollup(spark, path, ["mon", "shard"]).count() == 1
+    assert read_sketch_rollup(spark, path, grain).count() == 1
     more = spark.createDataFrame([("2024-01", 1, [2])], "mon string, shard int, kmv array<bigint>")
     write_sketch_rollup(more, path, ["mon", "shard"], mode="append")
-    got = read_sketch_rollup(spark, path, ["mon", "shard"])
+    got = read_sketch_rollup(spark, path, grain)
     assert sorted((r["shard"], list(r["kmv"])) for r in got.collect()) == [(0, [1]), (1, [2])]
+
+
+def test_empty_first_read_then_append(spark, tmp_path):
+    """A read before any bucket exists fails as a path read does, and
+    registers nothing: the read after an append sees the buckets."""
+    ahead = str(tmp_path / "ahead")
+    os.makedirs(ahead)
+    empty = str(tmp_path / "empty")
+    write_topn_rollup(
+        spark.createDataFrame([], "d int, item string"), empty, "d", "item", bucket_name="day"
+    )
+    for path in (ahead, empty):
+        with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+            read_topn_rollup(spark, path, bucket_name="day")
+        _write_days(spark, path, [1, 2], mode="append")
+        assert _by_day(spark, path) == {1: {"a": 3, "b": 2}, 2: {"a": 3, "b": 3}}
+
+
+def test_overwrites_over_the_same_buckets_register_again(spark, tmp_path):
+    """REFRESH keeps the registered schema, so a changed grain, data
+    schema or bucket type registers the table again."""
+    path = str(tmp_path / "regrain")
+    df = spark.createDataFrame([("2024-01", 0, [1])], "mon string, shard int, kmv array<bigint>")
+    write_sketch_rollup(df.drop("shard"), path, ["mon"])
+    assert read_sketch_rollup(spark, path, ["mon"]).columns == ["kmv", "mon"]
+
+    write_sketch_rollup(df, path, ["mon", "shard"])
+    got = read_sketch_rollup(spark, path, ["mon", "shard"])
+    assert [(r["mon"], r["shard"], list(r["kmv"])) for r in got.collect()] == [("2024-01", 0, [1])]
+
+    write_sketch_rollup(df.withColumn("n", F.lit(7)), path, ["mon", "shard"])
+    assert read_sketch_rollup(spark, path, ["mon", "shard"]).first()["n"] == 7
+
+    # back to one level over the same months
+    write_sketch_rollup(df.drop("shard"), path, ["mon"])
+    assert read_sketch_rollup(spark, path, ["mon"]).columns == ["kmv", "mon"]
+
+    days = str(tmp_path / "retyped")
+    _write_days(spark, days, [1])
+    assert _by_day(spark, days) == {1: {"a": 3, "b": 2}}
+    dated = spark.createDataFrame([("2024-01-01", "a")], "d string, item string")
+    write_topn_rollup(dated, days, F.to_date("d"), "item", bucket_name="day")
+    got = read_topn_rollup(spark, days, bucket_name="day")
+    assert dict(got.dtypes)["day"] == "date" and got.count() == 1
 
 
 def test_missing_rollup_fails_naming_the_path(spark, tmp_path):
@@ -195,13 +246,39 @@ def test_concurrent_first_reads(spark, tmp_path):
     assert got == [want[i % 2] for i in range(16)]
 
 
-def test_child_dirs_local_and_hadoop_agree(spark, tmp_path):
+def test_earlier_frame_plans_while_another_thread_appends(spark, tmp_path):
+    """Interval frames of an earlier read keep planning while another
+    thread appends buckets and reads: a changed bucket set repairs the
+    table's partitions (SYNC PARTITIONS) instead of dropping the table."""
+    path = str(tmp_path / "live")
+    _write_days(spark, path, [1])
+    rollup = read_topn_rollup(spark, path, bucket_name="day")
+    done = threading.Event()
+
+    def append_and_read():
+        try:
+            for d in range(2, 8):
+                _write_days(spark, path, [d], mode="append")
+                read_topn_rollup(spark, path, bucket_name="day")
+        finally:
+            done.set()
+
+    seen = []
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        writer = pool.submit(append_and_read)
+        while not done.is_set():
+            seen.append([r["topn"] for r in rollup.where(F.col("day") == 1).collect()])
+        writer.result(timeout=300)
+    assert len(seen) > 1 and all(s == [{"a": 3, "b": 2}] for s in seen)
+    assert sorted(_by_day(spark, path)) == list(range(1, 8))
+
+
+def test_child_dirs_lists_directories(spark, tmp_path):
     (tmp_path / "d=1").mkdir()
     (tmp_path / "d=2").mkdir()
     (tmp_path / "f.txt").write_text("x")
     root = str(tmp_path)
-    assert sorted(child_dirs(spark, f"file:{root}")) == ["d=1", "d=2"]  # os.scandir
-    assert sorted(child_dirs(spark, root)) == ["d=1", "d=2"]  # Hadoop listStatus
-    for p in (f"file:{root}/missing", f"{root}/missing"):
+    for p in (root, f"file:{root}", f"file://{root}"):
+        assert sorted(child_dirs(spark, p)) == ["d=1", "d=2"]
         with pytest.raises(FileNotFoundError, match="missing"):
-            child_dirs(spark, p)
+            child_dirs(spark, f"{p}/missing")
