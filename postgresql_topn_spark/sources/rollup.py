@@ -117,7 +117,10 @@ def _rollup_table(spark: SparkSession, path: str, depth: int) -> DataFrame:
             spark.sql(f"DROP TABLE IF EXISTS {name}")
             spark.catalog.createTable(name, path=where, source="parquet")
             spark.catalog.recoverPartitions(name)
-            parts = sum(c.isPartition for c in spark.catalog.listColumns(name))
+            # the catalog's metadata: Catalog.listColumns runs two Spark jobs
+            state = spark._jsparkSession.sessionState()
+            ident = state.sqlParser().parseTableIdentifier(name.split(".", 1)[1])
+            parts = state.catalog().getTableMetadata(ident).partitionColumnNames().size()
             if parts != depth:
                 depth = parts
                 dirs = _bucket_dirs(spark, where, depth)
