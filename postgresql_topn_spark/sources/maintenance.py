@@ -236,9 +236,9 @@ def compact_topn_rollup(
     the same law that made the appends valid)."""
     from postgresql_topn_spark.functions.aggregates import topn_union_agg
     from postgresql_topn_spark.functions.sketch import sketch_to_json
-    from postgresql_topn_spark.sources.rollup import read_topn_rollup
+    from postgresql_topn_spark.sources.rollup import _read_topn_rollup
 
-    rollup = read_topn_rollup(spark, path, bucket_name=bucket_name)
+    rollup, buckets = _read_topn_rollup(spark, path, bucket_name)
     merged = topn_union_agg(
         rollup,
         [bucket_name, *extra_group_names],
@@ -251,9 +251,11 @@ def compact_topn_rollup(
     merged = merged.persist()
     try:
         n = merged.count()
-        # one file per bucket partition: the repartition keys match the
-        # partitionBy, so every partition dir gets one writer task
-        out = merged.repartition(max(1, n), bucket_name)
+        # one file per bucket: hashing on the partitionBy column sends all
+        # of a bucket's rows to one writer task. One task per listed bucket
+        # directory (a task may write two buckets); an explicit count is
+        # not coalesced by AQE, so the row count would launch a task per row
+        out = merged.repartition(max(1, min(n, buckets)), bucket_name)
 
         def write(staging: str) -> None:
             out.write.mode("overwrite").partitionBy(bucket_name).parquet(

@@ -125,10 +125,11 @@ def input_bytes(
         return None
 
 
-def child_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Names of the directories directly under *path*: one Hadoop
-    ``listStatus``, so any scheme works. Raises FileNotFoundError
-    naming *path* when it does not exist."""
+def child_dirs(spark: SparkSession, path: str) -> dict[str, int]:
+    """The directories directly under *path*, name -> modification time
+    (epoch ms, as the filesystem reports it): one Hadoop ``listStatus``,
+    so any scheme works. Raises FileNotFoundError naming *path* when it
+    does not exist."""
     jpath = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     try:
@@ -137,7 +138,9 @@ def child_dirs(spark: SparkSession, path: str) -> list[str]:
         if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
             raise FileNotFoundError(f"no directory at {path}") from None
         raise
-    return [st.getPath().getName() for st in statuses if st.isDirectory()]
+    return {
+        st.getPath().getName(): st.getModificationTime() for st in statuses if st.isDirectory()
+    }
 
 
 # The reference's flagship CSV schema — 12-column Amazon customer reviews

@@ -365,3 +365,34 @@ def test_versioned_rewrite_end_to_end(spark, tmp_path):
     cur = current_table_path(spark, root)
     assert cur.endswith("/v=1")
     assert spark.read.parquet(cur).count() == 25
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_compaction_writes_one_task_per_bucket(spark, tmp_path, aqe):
+    """The write stage runs at most one task per bucket, not one per
+    compacted row (an explicit partition count, which AQE does not
+    coalesce), and still writes one file per bucket."""
+    path = str(tmp_path / "rollup")
+    df = spark.createDataFrame(
+        [(d, c, f"i{d}{c}") for d in range(4) for c in range(3)], "d int, c int, item string"
+    )
+    for _ in range(2):
+        write_topn_rollup(df, path, "d", "item", bucket_name="day", extra_group_cols=["c"], mode="append")
+    sc = spark.sparkContext
+    group = f"compact-aqe-{aqe}"
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc.setJobGroup(group, group)
+    try:
+        assert compact_topn_rollup(spark, path, bucket_name="day", extra_group_names=("c",)) == 12
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    write_job = max(tracker.getJobIdsForGroup(group))
+    write_stage = tracker.getStageInfo(max(tracker.getJobInfo(write_job).stageIds))
+    assert 1 <= write_stage.numTasks <= 4
+    for d in range(4):
+        assert len(glob.glob(os.path.join(path, f"day={d}", "*.parquet"))) == 1

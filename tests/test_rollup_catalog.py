@@ -10,12 +10,14 @@ import re
 import shutil
 import sys
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from postgresql_topn_spark.sources import rollup
 from postgresql_topn_spark.sources.maintenance import compact_topn_rollup
 from postgresql_topn_spark.sources.rollup import (
     read_sketch_rollup,
@@ -44,6 +46,24 @@ def _by_day(spark, path):
             out.setdefault(r["day"], {}).setdefault(k, 0)
             out[r["day"]][k] += v
     return out
+
+
+def _settle(path):
+    """Move each bucket directory modified within the settle window back
+    past it, so the next read trusts its listing; a later change still
+    shows as a new mtime."""
+    recent = time.time() - rollup._SETTLE_S - 1
+    for entry in os.scandir(path):
+        st = entry.stat()
+        if entry.is_dir() and "=" in entry.name and st.st_mtime > recent:
+            back = st.st_mtime_ns - int((rollup._SETTLE_S + 5) * 1e9)
+            os.utime(entry.path, ns=(st.st_atime_ns, back))
+
+
+def _add_file(path, bucket):
+    """Another writer adds a copy of a data file to *bucket*."""
+    part = next(f for f in os.listdir(os.path.join(path, bucket)) if f.endswith(".parquet"))
+    shutil.copy(os.path.join(path, bucket, part), os.path.join(path, bucket, "part-other.parquet"))
 
 
 def _table_of(df) -> str:
@@ -81,43 +101,145 @@ def test_one_day_read_of_720_buckets_lists_one_partition(spark, tmp_path):
 def test_interval_read_launches_no_listing_job(spark, tmp_path):
     """40 buckets is above Spark's 32-directory threshold for a parallel
     listing job: a path read pays that job and a schema job before the
-    scan, a catalog read runs only the scan's jobs."""
+    scan. A catalog read runs only the scan's jobs: one bucket is listed
+    on the driver, and a second read of an unchanged 40-day interval
+    keeps the session's file listings."""
     path = str(tmp_path / "r40")
     _write_days(spark, path, range(40))
-    built = read_topn_rollup(spark, path, bucket_name="day").where(F.col("day") == 3)
-    with _job_group(spark, "rollup-scan"):
+    _settle(path)
+    for days in (1, 40):
+        interval = F.col("day") < days
+        built = read_topn_rollup(spark, path, bucket_name="day").where(interval)
         built.collect()
-    with _job_group(spark, "rollup-read"):
-        read_topn_rollup(spark, path, bucket_name="day").where(F.col("day") == 3).collect()
-    assert _jobs(spark, "rollup-read") == _jobs(spark, "rollup-scan") >= 1
+        with _job_group(spark, f"rollup-scan-{days}"):
+            built.collect()
+        with _job_group(spark, f"rollup-read-{days}"):
+            got = read_topn_rollup(spark, path, bucket_name="day").where(interval).collect()
+        assert len(got) == days
+        assert _jobs(spark, f"rollup-read-{days}") == _jobs(spark, f"rollup-scan-{days}") >= 1
 
 
 def test_reads_see_every_writer(spark, tmp_path):
-    path = str(tmp_path / "fresh")
+    """Also with settled bucket mtimes, where each read may keep its
+    session's file listings, so the mtimes alone must show every writer."""
+    for settled in (False, True):
+        _reads_see_every_writer(spark, str(tmp_path / f"fresh-{settled}"), settled)
+
+
+def _reads_see_every_writer(spark, path, settled):
+    def by_day():
+        if settled:
+            _settle(path)
+        return _by_day(spark, path)
+
     _write_days(spark, path, [1, 2])
-    assert _by_day(spark, path) == {1: {"a": 3, "b": 2}, 2: {"a": 3, "b": 3}}
+    assert by_day() == {1: {"a": 3, "b": 2}, 2: {"a": 3, "b": 3}}
 
     # a same-session append: a new bucket and a delta in an old one
     _write_days(spark, path, [2, 3], mode="append")
-    assert _by_day(spark, path) == {1: {"a": 3, "b": 2}, 2: {"a": 6, "b": 6}, 3: {"a": 3, "b": 4}}
+    assert by_day() == {1: {"a": 3, "b": 2}, 2: {"a": 6, "b": 6}, 3: {"a": 3, "b": 4}}
 
     # a compaction rewrites every file: the next read lists the new ones
     assert compact_topn_rollup(spark, path, bucket_name="day") == 3
-    assert _by_day(spark, path) == {1: {"a": 3, "b": 2}, 2: {"a": 6, "b": 6}, 3: {"a": 3, "b": 4}}
+    assert by_day() == {1: {"a": 3, "b": 2}, 2: {"a": 6, "b": 6}, 3: {"a": 3, "b": 4}}
     assert all(len(os.listdir(os.path.join(path, f"day={d}"))) <= 2 for d in (1, 2, 3))
 
     # a bucket directory copied in from outside the library
     shutil.copytree(os.path.join(path, "day=1"), os.path.join(path, "day=9"))
-    assert _by_day(spark, path)[9] == {"a": 3, "b": 2}
+    assert by_day()[9] == {"a": 3, "b": 2}
 
     # another writer adds a file to an existing bucket
-    part = next(f for f in os.listdir(os.path.join(path, "day=1")) if f.endswith(".parquet"))
-    shutil.copy(os.path.join(path, "day=1", part), os.path.join(path, "day=1", "part-other.parquet"))
-    assert _by_day(spark, path)[1] == {"a": 6, "b": 4}
+    _add_file(path, "day=1")
+    assert by_day()[1] == {"a": 6, "b": 4}
 
     # an overwrite that removes buckets
     _write_days(spark, path, [4])
-    assert _by_day(spark, path) == {4: {"a": 3, "b": 5}}
+    assert by_day() == {4: {"a": 3, "b": 5}}
+
+
+def test_other_session_reads_a_compaction(spark, tmp_path):
+    """Each session caches its own relation: a session that read before
+    another compacted lists the new files, even after the compacting
+    session saw them."""
+    path = str(tmp_path / "sessions")
+    _write_days(spark, path, [1, 2])
+    _write_days(spark, path, [2], mode="append")
+    want = {1: {"a": 3, "b": 2}, 2: {"a": 6, "b": 6}}
+    _settle(path)
+    other = spark.newSession()
+    assert _by_day(other, path) == want
+    assert compact_topn_rollup(spark, path, bucket_name="day") == 2
+    _settle(path)
+    assert _by_day(spark, path) == want
+    assert _by_day(other, path) == want
+
+
+def test_unchanged_session_repairs_a_bucket_another_session_saw_go(spark, tmp_path):
+    """The catalog's partitions are shared: a session whose own listing
+    is unchanged still repairs a bucket that another session registered
+    and that is gone."""
+    path = str(tmp_path / "gone")
+    _write_days(spark, path, [1, 2])
+    want = {1: {"a": 3, "b": 2}, 2: {"a": 3, "b": 3}}
+    _settle(path)
+    other = spark.newSession()
+    assert _by_day(other, path) == want
+    shutil.copytree(os.path.join(path, "day=1"), os.path.join(path, "day=9"))
+    assert _by_day(spark, path)[9] == {"a": 3, "b": 2}
+    shutil.rmtree(os.path.join(path, "day=9"))
+    name = _table_of(read_topn_rollup(other, path, bucket_name="day"))
+    assert [r[0] for r in other.sql(f"SHOW PARTITIONS {DB}.{name}").collect()] == ["day=1", "day=2"]
+    assert _by_day(other, path) == want
+
+
+@pytest.mark.parametrize("case", ["settled", "in_window", "zero_mtime", "other_scheme"])
+def test_only_trusted_listings_keep_file_listings(spark, tmp_path, monkeypatch, case):
+    """The listing is pinned to one mtime while another writer adds a
+    file to the bucket. Only a trusted listing (settled nonzero mtimes
+    of a file: or hdfs: path) keeps the cached file listing and misses
+    the file; a bucket inside the settle window, an mtime of 0, or
+    another scheme refresh."""
+    path = str(tmp_path / "pinned")
+    _write_days(spark, path, [1])
+    now_ms = int(time.time() * 1000)
+    mtime = {"in_window": now_ms - 1000, "zero_mtime": 0}.get(case, now_ms - 60_000)
+    listing = rollup.child_dirs
+    monkeypatch.setattr(rollup, "child_dirs", lambda s, p: dict.fromkeys(listing(s, p), mtime))
+    if case == "other_scheme":
+        monkeypatch.setattr(rollup, "_TRUSTED_SCHEMES", ("hdfs", "viewfs"))
+    assert _by_day(spark, path) == {1: {"a": 3, "b": 2}}
+    _add_file(path, "day=1")
+    want = {"a": 3, "b": 2} if case == "settled" else {"a": 6, "b": 4}
+    assert _by_day(spark, path) == {1: want}
+
+
+def test_trusted_listings():
+    clock = 1_000_000.0
+    old = (clock - rollup._SETTLE_S) * 1000
+    assert rollup._trusted("file:/r", {"d=1/": old, "d=2/": 1}, clock)
+    assert rollup._trusted("hdfs://nn:8020/r", {"d=1/": old}, clock)
+    assert rollup._trusted("viewfs://c/r", {"d=1/": old}, clock)
+    assert not rollup._trusted("file:/r", {"d=1/": old + 1}, clock)
+    assert not rollup._trusted("file:/r", {"d=1/": old, "d=2/": 0}, clock)
+    assert not rollup._trusted("s3a://b/r", {"d=1/": old}, clock)
+    assert not rollup._trusted("file:/r", {}, clock)
+
+
+def test_persisted_frame_stays_cached_across_an_unchanged_read(spark, tmp_path):
+    path = str(tmp_path / "kept")
+    _write_days(spark, path, [1, 2])
+    _settle(path)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    frame = read_topn_rollup(spark, path, bucket_name="day").persist()
+    try:
+        assert frame.count() == 2
+        cached = set(jsc.getPersistentRDDs().keys())
+        assert cached - before
+        assert read_topn_rollup(spark, path, bucket_name="day").count() == 2
+        assert set(jsc.getPersistentRDDs().keys()) == cached
+    finally:
+        frame.unpersist()
 
 
 def test_table_is_external_and_data_survives_reregistration(spark, tmp_path):
