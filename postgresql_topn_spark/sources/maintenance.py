@@ -236,26 +236,27 @@ def compact_topn_rollup(
     the same law that made the appends valid)."""
     from postgresql_topn_spark.functions.aggregates import topn_union_agg
     from postgresql_topn_spark.functions.sketch import sketch_to_json
-    from postgresql_topn_spark.sources.rollup import _read_topn_rollup
+    from postgresql_topn_spark.sources.rollup import read_topn_rollup
 
-    rollup, buckets = _read_topn_rollup(spark, path, bucket_name)
+    rollup = read_topn_rollup(spark, path, bucket_name=bucket_name)
     merged = topn_union_agg(
         rollup,
         [bucket_name, *extra_group_names],
         "topn",
         counters=counters,
     ).withColumn("topn", sketch_to_json(F.col("topn")))
-    # persist: the count and the staged write would otherwise each run
+    # persist: the counts and the staged write would otherwise each run
     # the full fragment scan + merge shuffle (review pin — compaction
     # paid its dominant cost twice)
     merged = merged.persist()
     try:
-        n = merged.count()
+        n, buckets = merged.agg(F.count(F.lit(1)), F.countDistinct(bucket_name)).first()
         # one file per bucket: hashing on the partitionBy column sends all
-        # of a bucket's rows to one writer task. One task per listed bucket
-        # directory (a task may write two buckets); an explicit count is
-        # not coalesced by AQE, so the row count would launch a task per row
-        out = merged.repartition(max(1, min(n, buckets)), bucket_name)
+        # of a bucket's rows to one writer task. One task per distinct
+        # bucket value (a task may write two buckets); an explicit count
+        # is not coalesced by AQE, so the row count would launch a task
+        # per row
+        out = merged.repartition(max(1, buckets), bucket_name)
 
         def write(staging: str) -> None:
             out.write.mode("overwrite").partitionBy(bucket_name).parquet(

@@ -35,8 +35,11 @@ rollup, the partition names for a sketch rollup). Then:
   prunes to.
 
 The first branch trusts mtimes only where a change must show as a new
-one: a ``file:``, ``hdfs:`` or ``viewfs:`` path (an object store's
-directory mtimes are synthesized), every mtime set, and the newest at
+one: a path stored on ``file:`` or ``hdfs:`` (an object store's
+directory mtimes are synthesized; a ``viewfs:`` path is judged by the
+target of its mount link, so a link to an object store is not
+trusted, nor is an internal directory of the mount table), every
+mtime set, and the newest at
 least ``_SETTLE_S`` older than a clock reading taken before the listing
 that saw it (a change in the same timestamp tick keeps its mtime; the
 window also covers that much skew between the driver's clock and the
@@ -90,7 +93,7 @@ _SEEN: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Snapshot]]" = (
     weakref.WeakKeyDictionary()
 )
 # schemes whose directory mtimes change with every file added or removed
-_TRUSTED_SCHEMES = ("file", "hdfs", "viewfs")
+_TRUSTED_SCHEMES = ("file", "hdfs")
 # a change this close to a listing may keep the mtime the listing saw
 _SETTLE_S = 2.0
 
@@ -110,13 +113,23 @@ def _bucket_dirs(spark: SparkSession, root: str, depth: int) -> dict[str, int]:
     return level
 
 
-def _trusted(where: str, mtimes: dict[str, int], clock: float) -> bool:
-    """Whether any later change to a bucket of this listing of the
-    qualified path *where* must show as a new mtime: a scheme with real
-    directory mtimes, every mtime set, and the newest at least
-    ``_SETTLE_S`` older than *clock*, read before the listing."""
+def _storage(fs, qualified) -> str:
+    """The URI of the storage behind the *qualified* Hadoop path: a
+    ``viewfs:`` mount link resolves to its target, which may be any
+    filesystem; an internal directory of the mount table stays
+    ``viewfs:``."""
+    if qualified.toUri().getScheme() == "viewfs":
+        return fs.resolvePath(qualified).toString()
+    return qualified.toString()
+
+
+def _trusted(target: str, mtimes: dict[str, int], clock: float) -> bool:
+    """Whether any later change to a bucket of this listing of a rollup
+    stored at *target* (see :func:`_storage`) must show as a new mtime:
+    a scheme with real directory mtimes, every mtime set, and the newest
+    at least ``_SETTLE_S`` older than *clock*, read before the listing."""
     return (
-        where.split(":", 1)[0] in _TRUSTED_SCHEMES
+        target.split(":", 1)[0] in _TRUSTED_SCHEMES
         and bool(mtimes)
         and min(mtimes.values()) > 0
         and max(mtimes.values()) <= (clock - _SETTLE_S) * 1000
@@ -144,16 +157,17 @@ def _data_schema(spark: SparkSession, root: str, dirs: frozenset[str]) -> str | 
     return None
 
 
-def _rollup_table(spark: SparkSession, path: str, depth: int) -> tuple[DataFrame, int]:
+def _rollup_table(spark: SparkSession, path: str, depth: int) -> DataFrame:
     """*path* as an external table of the session catalog, as fresh as
-    the files on disk (see the module docstring), and the number of
-    bucket directories listed. *depth* is the number of partition
-    levels the caller expects; the catalog's own inference overrides
-    it, since a stream rollup read as a topn rollup is partitioned by
-    ``run_id``/``batch_id``. Fails with FileNotFoundError naming the
-    qualified *path* when it does not exist."""
+    the files on disk (see the module docstring). *depth* is the number
+    of partition levels the caller expects; the catalog's own inference
+    overrides it, since a stream rollup read as a topn rollup is
+    partitioned by ``run_id``/``batch_id``. Fails with FileNotFoundError
+    naming the qualified *path* when it does not exist."""
     jpath = _jclass(spark._jvm, "org.apache.hadoop.fs.Path")(path)
-    where = jpath.getFileSystem(spark._jsc.hadoopConfiguration()).makeQualified(jpath).toString()
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    qualified = fs.makeQualified(jpath)
+    where = qualified.toString()
     name = f"{_DB}.r{hashlib.sha256(where.encode()).hexdigest()[:32]}"
     with _LOCK:
         registered = _REGISTERED.setdefault(spark.sparkContext, {})
@@ -184,10 +198,10 @@ def _rollup_table(spark: SparkSession, path: str, depth: int) -> tuple[DataFrame
                 spark.sql(f"REPAIR TABLE {name} SYNC PARTITIONS")
             else:
                 spark.catalog.refreshTable(name)
-        if _trusted(where, mtimes, clock):
+        if _trusted(_storage(fs, qualified), mtimes, clock):
             seen[name] = (mtimes, schema)
         registered[name] = (depth, dirs, schema)
-        return spark.table(name), len(dirs)
+        return spark.table(name)
 
 
 def write_topn_rollup(
@@ -238,19 +252,13 @@ def read_topn_rollup(
     it is validated against the on-disk partition column so a mismatch
     fails here, at load, instead of as a missing-column error in the
     first downstream interval filter."""
-    return _read_topn_rollup(spark, path, bucket_name)[0]
-
-
-def _read_topn_rollup(spark: SparkSession, path: str, bucket_name: str) -> tuple[DataFrame, int]:
-    """:func:`read_topn_rollup`'s frame and the number of bucket
-    directories the read listed."""
-    df, buckets = _rollup_table(spark, path, 1)
+    df = _rollup_table(spark, path, 1)
     if bucket_name not in df.columns:
         raise ValueError(
             f"rollup at {path} has no bucket column {bucket_name!r}; "
             f"found columns {df.columns}"
         )
-    return df.withColumn("topn", F.from_json("topn", "map<string,bigint>")), buckets
+    return df.withColumn("topn", F.from_json("topn", "map<string,bigint>"))
 
 
 def query_topn_rollup(
@@ -293,7 +301,7 @@ def read_sketch_rollup(
     filters on the partition columns prune in the catalog before any
     file is listed; a new partition at any level of a multi-level grain
     is visible on the next read."""
-    df = _rollup_table(spark, path, len(partition_names))[0]
+    df = _rollup_table(spark, path, len(partition_names))
     missing = [c for c in partition_names if c not in df.columns]
     if missing:
         raise ValueError(

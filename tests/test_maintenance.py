@@ -367,24 +367,37 @@ def test_versioned_rewrite_end_to_end(spark, tmp_path):
     assert spark.read.parquet(cur).count() == 25
 
 
+@pytest.mark.parametrize("kind", ["daily", "stream"])
 @pytest.mark.parametrize("aqe", ["true", "false"])
-def test_compaction_writes_one_task_per_bucket(spark, tmp_path, aqe):
-    """The write stage runs at most one task per bucket, not one per
-    compacted row (an explicit partition count, which AQE does not
-    coalesce), and still writes one file per bucket."""
+def test_compaction_writes_one_task_per_bucket(spark, tmp_path, aqe, kind):
+    """The write stage runs one task per distinct bucket value, not one
+    per compacted row (an explicit partition count, which AQE does not
+    coalesce), and still writes one file per bucket. A stream rollup is
+    stored by run_id/batch_id, so its bucket directories are batches,
+    not buckets: one batch of four event types still gets four tasks."""
+    from postgresql_topn_spark.functions.aggregates import topn_add_agg
+    from postgresql_topn_spark.functions.sketch import sketch_to_json
+    from postgresql_topn_spark.streaming.topn_stream import _replay_safe_append
+
     path = str(tmp_path / "rollup")
     df = spark.createDataFrame(
         [(d, c, f"i{d}{c}") for d in range(4) for c in range(3)], "d int, c int, item string"
     )
-    for _ in range(2):
-        write_topn_rollup(df, path, "d", "item", bucket_name="day", extra_group_cols=["c"], mode="append")
+    if kind == "daily":
+        for _ in range(2):
+            write_topn_rollup(df, path, "d", "item", bucket_name="day", extra_group_cols=["c"], mode="append")
+        bucket, extra = "day", ("c",)
+    else:
+        sk = topn_add_agg(df.withColumnRenamed("d", "event_type"), ["event_type", "c"], "item", counters=100)
+        _replay_safe_append(sk.withColumn("topn", sketch_to_json("topn")), path, "run_a", 0)
+        bucket, extra = "event_type", ("c",)
     sc = spark.sparkContext
-    group = f"compact-aqe-{aqe}"
+    group = f"compact-{kind}-aqe-{aqe}"
     old = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", aqe)
     sc.setJobGroup(group, group)
     try:
-        assert compact_topn_rollup(spark, path, bucket_name="day", extra_group_names=("c",)) == 12
+        assert compact_topn_rollup(spark, path, bucket_name=bucket, extra_group_names=extra) == 12
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
@@ -393,6 +406,6 @@ def test_compaction_writes_one_task_per_bucket(spark, tmp_path, aqe):
     tracker = sc.statusTracker()
     write_job = max(tracker.getJobIdsForGroup(group))
     write_stage = tracker.getStageInfo(max(tracker.getJobInfo(write_job).stageIds))
-    assert 1 <= write_stage.numTasks <= 4
+    assert write_stage.numTasks == 4
     for d in range(4):
-        assert len(glob.glob(os.path.join(path, f"day={d}", "*.parquet"))) == 1
+        assert len(glob.glob(os.path.join(path, f"{bucket}={d}", "*.parquet"))) == 1

@@ -98,32 +98,44 @@ def test_one_day_read_of_720_buckets_lists_one_partition(spark, tmp_path):
     assert [r["topn"] for r in day.collect()] == [{"b": 4, "a": 1}]
 
 
-def test_interval_read_launches_no_listing_job(spark, tmp_path):
+def test_interval_read_launches_no_listing_job(spark, tmp_path, monkeypatch):
     """40 buckets is above Spark's 32-directory threshold for a parallel
     listing job: a path read pays that job and a schema job before the
-    scan. A catalog read runs only the scan's jobs: one bucket is listed
-    on the driver, and a second read of an unchanged 40-day interval
-    keeps the session's file listings."""
+    scan. A catalog read runs only the scan's jobs: a read that refreshes
+    lists one bucket on the driver, and a second read of an unchanged
+    40-day interval keeps the session's file listings."""
     path = str(tmp_path / "r40")
     _write_days(spark, path, range(40))
-    _settle(path)
-    for days in (1, 40):
-        interval = F.col("day") < days
-        built = read_topn_rollup(spark, path, bucket_name="day").where(interval)
-        built.collect()
-        with _job_group(spark, f"rollup-scan-{days}"):
+    with monkeypatch.context() as m:
+        # no listing is trusted: every read refreshes the table
+        m.setattr(rollup, "_TRUSTED_SCHEMES", ())
+        built = read_topn_rollup(spark, path, bucket_name="day").where(F.col("day") == 3)
+        with _job_group(spark, "rollup-scan"):
             built.collect()
-        with _job_group(spark, f"rollup-read-{days}"):
-            got = read_topn_rollup(spark, path, bucket_name="day").where(interval).collect()
-        assert len(got) == days
-        assert _jobs(spark, f"rollup-read-{days}") == _jobs(spark, f"rollup-scan-{days}") >= 1
+        with _job_group(spark, "rollup-read"):
+            read_topn_rollup(spark, path, bucket_name="day").where(F.col("day") == 3).collect()
+        assert _jobs(spark, "rollup-read") == _jobs(spark, "rollup-scan") >= 1
+
+    _settle(path)
+    interval = F.col("day") < 40
+    built = read_topn_rollup(spark, path, bucket_name="day").where(interval)
+    built.collect()
+    with _job_group(spark, "rollup-scan-40"):
+        built.collect()
+    with _job_group(spark, "rollup-read-40"):
+        got = read_topn_rollup(spark, path, bucket_name="day").where(interval).collect()
+    assert len(got) == 40
+    assert _jobs(spark, "rollup-read-40") == _jobs(spark, "rollup-scan-40") >= 1
 
 
-def test_reads_see_every_writer(spark, tmp_path):
-    """Also with settled bucket mtimes, where each read may keep its
-    session's file listings, so the mtimes alone must show every writer."""
-    for settled in (False, True):
-        _reads_see_every_writer(spark, str(tmp_path / f"fresh-{settled}"), settled)
+def test_reads_see_every_writer(spark, tmp_path, monkeypatch):
+    """Once with every read refreshing, and once with settled bucket
+    mtimes, where each read may keep its session's file listings, so the
+    mtimes alone must show every writer."""
+    with monkeypatch.context() as m:
+        m.setattr(rollup, "_TRUSTED_SCHEMES", ())
+        _reads_see_every_writer(spark, str(tmp_path / "fresh"), settled=False)
+    _reads_see_every_writer(spark, str(tmp_path / "fresh-settled"), settled=True)
 
 
 def _reads_see_every_writer(spark, path, settled):
@@ -206,23 +218,36 @@ def test_only_trusted_listings_keep_file_listings(spark, tmp_path, monkeypatch, 
     listing = rollup.child_dirs
     monkeypatch.setattr(rollup, "child_dirs", lambda s, p: dict.fromkeys(listing(s, p), mtime))
     if case == "other_scheme":
-        monkeypatch.setattr(rollup, "_TRUSTED_SCHEMES", ("hdfs", "viewfs"))
+        monkeypatch.setattr(rollup, "_TRUSTED_SCHEMES", ("hdfs",))
     assert _by_day(spark, path) == {1: {"a": 3, "b": 2}}
     _add_file(path, "day=1")
     want = {"a": 3, "b": 2} if case == "settled" else {"a": 6, "b": 4}
     assert _by_day(spark, path) == {1: want}
 
 
-def test_trusted_listings():
+def test_trusted_listings(spark, tmp_path):
     clock = 1_000_000.0
     old = (clock - rollup._SETTLE_S) * 1000
     assert rollup._trusted("file:/r", {"d=1/": old, "d=2/": 1}, clock)
     assert rollup._trusted("hdfs://nn:8020/r", {"d=1/": old}, clock)
-    assert rollup._trusted("viewfs://c/r", {"d=1/": old}, clock)
     assert not rollup._trusted("file:/r", {"d=1/": old + 1}, clock)
     assert not rollup._trusted("file:/r", {"d=1/": old, "d=2/": 0}, clock)
     assert not rollup._trusted("s3a://b/r", {"d=1/": old}, clock)
     assert not rollup._trusted("file:/r", {}, clock)
+    # a viewfs mount link may point at any filesystem: the scheme that
+    # counts is its target's; the mount table's own directories stay
+    # viewfs: and are not trusted
+    assert not rollup._trusted("viewfs://c/r", {"d=1/": old}, clock)
+    os.makedirs(tmp_path / "r" / "day=1")
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark.sparkContext._jsc.hadoopConfiguration())
+    conf.set("fs.viewfs.impl.disable.cache", "true")
+    conf.set("fs.viewfs.mounttable.topntest.link./data/r", (tmp_path / "r").as_uri())
+    link = jvm.org.apache.hadoop.fs.Path("viewfs://topntest/data/r")
+    fs = link.getFileSystem(conf)
+    assert rollup._storage(fs, fs.makeQualified(link)) == f"file:{tmp_path / 'r'}"
+    mount_dir = fs.makeQualified(jvm.org.apache.hadoop.fs.Path("viewfs://topntest/data"))
+    assert rollup._storage(fs, mount_dir) == "viewfs://topntest/data"
 
 
 def test_persisted_frame_stays_cached_across_an_unchanged_read(spark, tmp_path):
