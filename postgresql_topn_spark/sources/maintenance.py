@@ -250,7 +250,9 @@ def compact_topn_rollup(
     # paid its dominant cost twice)
     merged = merged.persist()
     try:
-        n, buckets = merged.agg(F.count(F.lit(1)), F.countDistinct(bucket_name)).first()
+        # collect_set, not countDistinct: a distinct aggregate adds a
+        # shuffle stage, under AQE one more job
+        n, buckets = merged.agg(F.count(F.lit(1)), F.size(F.collect_set(bucket_name))).first()
         # one file per bucket: hashing on the partitionBy column sends all
         # of a bucket's rows to one writer task. One task per distinct
         # bucket value (a task may write two buckets); an explicit count
