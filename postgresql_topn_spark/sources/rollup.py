@@ -39,9 +39,8 @@ one: a path stored on ``file:`` or ``hdfs:`` (an object store's
 directory mtimes are synthesized; a ``viewfs:`` path is judged by the
 target of its mount link, so a link to an object store is not
 trusted, nor is an internal directory of the mount table), every
-mtime set, and the newest at
-least ``_SETTLE_S`` older than a clock reading taken before the listing
-that saw it (a change in the same timestamp tick keeps its mtime; the
+mtime set, and the newest at least ``_SETTLE_S`` older than a clock
+reading taken before the listing that saw it (a change in the same timestamp tick keeps its mtime; the
 window also covers that much skew between the driver's clock and the
 filesystem's). Any other listing refreshes. A file rewritten in place
 under its old name changes no directory mtime, so it is not seen until
