@@ -3,14 +3,13 @@
 The reference's users call ``topn(jsonb, n)``, ``topn_add``,
 ``topn_union`` directly in SQL (update/topn--2.0.0.sql:2-15) and — the
 flagship pattern — ``SELECT keys, topn_add_agg(item) … GROUP BY keys``
-(update/topn--2.3.0--2.3.1.sql:34-51, README.md:84-96). Spark's
-registration surface for session-scoped functions is Python UDF/UDTF/
-pandas-UDAF registration, so that is what this module provides:
+(update/topn--2.3.0--2.3.1.sql:34-51, README.md:84-96).
+:func:`register_sql_functions` provides both:
 
-- ``topn(sketch, n)`` — a Python UDTF (SETOF topn_record, like the
-  reference SRF topn.c:189-283), usable with LATERAL.
-- ``topn_add(sketch, item)`` / ``topn_union(a, b)`` — scalar UDFs with
-  the reference's NULL matrix and prune policies.
+- ``topn(sketch, n)`` — a SQL table function (SETOF topn_record, like
+  the reference SRF topn.c:189-283), usable with LATERAL.
+- ``topn_add(sketch, item)`` / ``topn_union(a, b)`` — scalar SQL
+  functions with the reference's NULL matrix and prune policies.
 - ``topn_entries(sketch, n)`` — array<struct> form of topn for callers
   that prefer explode().
 - ``topn_add_agg(item)`` / ``topn_union_agg(sketch)`` /
@@ -19,25 +18,31 @@ pandas-UDAF registration, so that is what this module provides:
   queries (Arrow-batched; the whole group's items stream through one
   Python worker).
 
-Every one of these finishes through ``sketch_state.pack_counts``: exact
-totals saturate into int64 before they are ranked (frequency DESC, item
-ASC) and cut, the reference's order (topn.c:997-1009 before
-topn.c:869-908), so at the int64 edge they keep the same items as the
-Tier-1 builders and the Tier-2 sketches.
+The first four are ``CREATE TEMPORARY FUNCTION … RETURN <expr>``
+bodies built from the SQL-text twins of the Column forms in
+functions/sketch.py (ranking) and functions/aggregates.py (item
+intake): Catalyst inlines them into the calling plan, so they run in
+the JVM like the Column API. SQL cannot define an aggregate, so the
+three UDAFs stay Python; they finish through ``sketch_state.
+pack_counts``: exact totals saturate into int64 before they are ranked
+(frequency DESC, item ASC) and cut, the reference's order
+(topn.c:997-1009 before topn.c:869-908), so at the int64 edge they keep
+the same items as the Tier-1 builders and the Tier-2 sketches.
 
-NOTE the performance contract: these registered forms cross the
-Python/Arrow boundary and exist for SQL-surface parity and scalar/ad-hoc
-use. A GROUPED_AGG pandas UDAF gets no Catalyst partial aggregation:
-every raw row shuffles to its group's reducer before Python sees it.
-The hot aggregation path for ``spark.sql()`` users is :func:`topn_sql`,
-which rewrites the flagship aggregate statements onto the SQL-text
-builders of functions/aggregates.py — the same builders the Column API
-runs, entirely JVM-side. Registering does not slow anything else down.
+NOTE the performance contract of the UDAFs: they cross the
+Python/Arrow boundary and exist for SQL-surface parity and ad-hoc use.
+A GROUPED_AGG pandas UDAF gets no Catalyst partial aggregation: every
+raw row shuffles to its group's reducer before Python sees it. The hot
+aggregation path for ``spark.sql()`` users is :func:`topn_sql`, which
+rewrites the flagship aggregate statements onto the SQL-text builders
+of functions/aggregates.py — the same builders the Column API runs,
+entirely JVM-side. Registering does not slow anything else down.
 
 GUC parity: the reference reads ``topn.number_of_counters`` at every
-call (topn.c:229-233). Worker-side Python cannot read the session conf
-(no SparkSession exists in UDF/UDTF workers or the UDTF analyze
-process), so per-call semantics are provided one level up, two ways:
+call (topn.c:229-233). The budget is spliced into the function bodies
+(and captured by the UDAFs, whose workers cannot read the session
+conf) at registration, so per-call semantics are provided one level
+up, two ways:
 
 - :func:`postgresql_topn_spark.conf.set_number_of_counters`
   re-registers the SQL functions of every session that registered
@@ -59,17 +64,26 @@ import weakref
 
 import pandas as pd
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import PandasUDFType, pandas_udf, udf, udtf
+from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-from postgresql_topn_spark.conf import CONF_KEY, DEFAULT_COUNTERS, resolve_counters
+from postgresql_topn_spark.conf import (
+    CONF_KEY,
+    DEFAULT_COUNTERS,
+    INT64_MAX,
+    resolve_counters,
+)
 from postgresql_topn_spark.functions.aggregates import (  # noqa: F401
+    _normalize_sql,
     topn_add_agg_sql,
     topn_union_agg_sql,
     topn_weighted_agg_sql,
 )
-from postgresql_topn_spark.functions.sketch import SKETCH_TYPE
+from postgresql_topn_spark.functions.sketch import (
+    SKETCH_DDL,
+    SKETCH_TYPE,
+    entries_sorted_sql,
+)
 from postgresql_topn_spark.operators.sketch_state import (
-    clamp64,
     pack_counts,
     truncate_key_bytes,
     weight_to_long,
@@ -118,6 +132,64 @@ def _install_conf_watch(spark: SparkSession) -> None:
     spark._topn_sql_conf_watch = True
 
 
+def _sat_add_sql(a: str, b: str) -> str:
+    """SQL-text twin of sketch._sat_add. *a* is repeated in the text."""
+    return (
+        f"coalesce(try_add({a}, {b}), "
+        f"CASE WHEN {a} > 0 THEN {INT64_MAX} ELSE {-INT64_MAX - 1} END)"
+    )
+
+
+def _prune_sql(m: str, c: int) -> str:
+    """SQL-text twin of sketch.prune_sketch. *m* is repeated in the text."""
+    return (
+        f"CASE WHEN size({m}) <= {c} THEN {m} "
+        f"ELSE map_from_entries(slice({entries_sorted_sql(m)}, 1, {c})) END"
+    )
+
+
+def _function_defs(c: int) -> dict[str, str]:
+    """``name -> (params) RETURNS … RETURN body`` of the SQL-bodied
+    functions for a budget of *c* counters. Each body follows its Column
+    form in functions/sketch.py clause for clause."""
+    # sketch.topn_entries: n > counters errors even for a NULL or small
+    # sketch (topn.c:229-233); n <= 0 gives [] (NULL for a NULL sketch)
+    top = (
+        f"CASE WHEN n > {c} THEN raise_error(concat('requested n=', n, "
+        f"' is greater than the configured number of counters ({c})')) "
+        "WHEN n <= 0 AND sketch IS NOT NULL THEN array() "
+        f"ELSE slice({entries_sorted_sql('sketch')}, 1, n) END"
+    )
+    # sketch.topn_add: non-STRICT NULL matrix (topn.c:305-322); an
+    # existing item bumps without a prune (topn.c:350 prunes on insert)
+    it = _normalize_sql("item")
+    bump = _sat_add_sql("coalesce(v, 0L)", "1L")
+    add = (
+        "CASE WHEN sketch IS NULL AND item IS NULL THEN map() "
+        f"WHEN sketch IS NULL THEN map({it}, 1L) "
+        "WHEN item IS NULL THEN sketch "
+        f"WHEN map_contains_key(sketch, {it}) THEN transform_values(sketch, "
+        f"(k, v) -> CASE WHEN k = {it} THEN {bump} ELSE v END) "
+        f"ELSE {_prune_sql(f'map_concat(sketch, map({it}, 1L))', c)} END"
+    )
+    # sketch.topn_union: STRICT (update/topn--2.0.0.sql:12-15)
+    merged = (
+        "map_zip_with(a, b, (k, v1, v2) -> "
+        f"{_sat_add_sql('coalesce(v1, 0L)', 'coalesce(v2, 0L)')})"
+    )
+    union = f"CASE WHEN a IS NOT NULL AND b IS NOT NULL THEN {_prune_sql(merged, c)} END"
+    entries = "ARRAY<STRUCT<item: STRING, frequency: BIGINT>>"
+    return {
+        "topn": (
+            f"(sketch {SKETCH_DDL}, n BIGINT) RETURNS TABLE "
+            f"(item STRING, frequency BIGINT) RETURN SELECT inline({top})"
+        ),
+        "topn_entries": f"(sketch {SKETCH_DDL}, n BIGINT) RETURNS {entries} RETURN {top}",
+        "topn_add": f"(sketch {SKETCH_DDL}, item STRING) RETURNS {SKETCH_DDL} RETURN {add}",
+        "topn_union": f"(a {SKETCH_DDL}, b {SKETCH_DDL}) RETURNS {SKETCH_DDL} RETURN {union}",
+    }
+
+
 def register_sql_functions(spark: SparkSession, *, counters: int | None = None) -> None:
     """Register the topn surface for ``spark.sql()`` sessions.
 
@@ -125,64 +197,24 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
     re-resolved whenever :func:`~postgresql_topn_spark.conf.
     set_number_of_counters` changes it (per-call GUC semantics,
     topn.c:229-233). An explicit ``counters=`` pins the budget until the
-    next explicit registration."""
+    next explicit registration.
+
+    The functions depend only on the resolved budget, so a session that
+    already holds them for that budget skips the CREATEs (each costs a
+    parse and analysis); :func:`topn_sql` calls this once per statement."""
     c = resolve_counters(counters, spark)
-
-    @udtf(returnType="item string, frequency bigint")
-    class TopnUdtf:
-        """topn(sketch, n) -> SETOF (item, frequency) — topn.c:189-283:
-        NULL/empty sketch -> 0 rows; n > counters -> error; emits
-        min(n, size) entries, frequency DESC, item ASC."""
-
-        def eval(self, sketch: dict, n: int):  # noqa: D401
-            if n is not None and n > c:
-                raise ValueError(
-                    f"requested n={n} is greater than the configured "
-                    f"number of counters ({c})"
-                )
-            if sketch is None or n is None or n <= 0:
-                return
-            yield from pack_counts(sketch, n).items()
-
-    @udf(returnType=SKETCH_TYPE)
-    def topn_add_udf(sketch: dict, item: str):
-        # non-STRICT NULL matrix, topn.c:305-322
-        if sketch is None and item is None:
-            return {}
-        if sketch is None:
-            return {truncate_key_bytes(str(item)): 1}
-        if item is None:
-            return sketch
-        item = truncate_key_bytes(str(item))
-        out = dict(sketch)
-        if item in out:
-            out[item] = clamp64(out[item] + 1)
-            return out  # prune only fires on insert (topn.c:350)
-        out[item] = 1
-        return pack_counts(out, c)
-
-    @udf(returnType=SKETCH_TYPE)
-    def topn_union_udf(a: dict, b: dict):
-        # STRICT: NULL if either argument is NULL (update/topn--2.0.0.sql:12-15)
-        if a is None or b is None:
-            return None
-        out = dict(a)
-        for k, v in b.items():
-            out[k] = out.get(k, 0) + v
-        return pack_counts(out, c)
-
-    @udf(returnType="array<struct<item:string,frequency:bigint>>")
-    def topn_entries_udf(sketch: dict, n: int):
-        if n is not None and n > c:
-            raise ValueError(
-                f"requested n={n} is greater than the configured "
-                f"number of counters ({c})"
-            )
-        if sketch is None or n is None:
-            return None
-        if n <= 0:
-            return []
-        return list(pack_counts(sketch, n).items())
+    # follow-mode bookkeeping first: the CREATEs below go through
+    # spark.sql, whose conf watch must already see this registration
+    if counters is None:
+        _FOLLOW_CONF_SESSIONS.add(spark)
+        spark._topn_registered_conf = _raw_conf(spark)
+        _install_conf_watch(spark)
+    else:
+        _FOLLOW_CONF_SESSIONS.discard(spark)
+    if getattr(spark, "_topn_registered_counters", None) == c:
+        return
+    for name, body in _function_defs(c).items():
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{body}")
 
     # --- GROUPED_AGG aggregates: the reference's primary API surface ---
     # (update/topn--2.3.0--2.3.1.sql:34-51). Arrow ships each group's
@@ -241,20 +273,10 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
             totals[k] = totals.get(k, 0) + weight_to_long(w)
         return pack_counts(totals, c, drop_nonpositive=True)
 
-    spark.udtf.register("topn", TopnUdtf)
-    spark.udf.register("topn_add", topn_add_udf)
-    spark.udf.register("topn_union", topn_union_udf)
-    spark.udf.register("topn_entries", topn_entries_udf)
     spark.udf.register("topn_add_agg", topn_add_agg_udaf)
     spark.udf.register("topn_union_agg", topn_union_agg_udaf)
     spark.udf.register("topn_weighted_agg", topn_weighted_agg_udaf)
-
-    if counters is None:
-        _FOLLOW_CONF_SESSIONS.add(spark)
-        spark._topn_registered_conf = _raw_conf(spark)
-        _install_conf_watch(spark)
-    else:
-        _FOLLOW_CONF_SESSIONS.discard(spark)
+    spark._topn_registered_counters = c
 
 
 # ---------------------------------------------------------------------------
@@ -329,85 +351,77 @@ _ANY_TOPN_FN_RE = _re.compile(
 )
 
 
+# A string literal, quoted identifier or comment. Inside '…' and "…" a
+# backslash escapes the next character and a doubled quote continues the
+# literal; `…` knows only the doubled quote. An unterminated span runs to
+# the end of the text; a line comment takes its newline.
+_SPAN_RE = _re.compile(
+    r"""'(?:[^'\\]|\\.?|'')*'?"""
+    r'''|"(?:[^"\\]|\\.?|"")*"?'''
+    r"|`(?:[^`]|``)*`?"
+    r"|--[^\n]*\n?"
+    r"|/\*.*?(?:\*/|\Z)",
+    _re.S,
+)
+
+
+def _segments(s: str, i: int = 0):
+    """Split *s* from *i* into ``(start, end, quoted)`` runs, where a
+    quoted run is one literal, quoted identifier or comment — the one
+    scanner every rewriter pass uses, so they all agree on where a
+    quoted span ends."""
+    for m in _SPAN_RE.finditer(s, i):
+        if m.start() > i:
+            yield i, m.start(), False
+        yield m.start(), m.end(), True
+        i = m.end()
+    if i < len(s):
+        yield i, len(s), False
+
+
 def _top_mask(s: str) -> list[bool]:
     """True at positions that sit at paren-depth 0 outside string/ident
     literals and comments — the only places clause keywords and list
     commas are structural."""
     mask = [False] * len(s)
     depth = 0
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            q = ch
-            i += 1
-            while i < n:
-                if s[i] == "\\" and q != "`":
-                    i += 2
-                    continue
-                if s[i] == q:
-                    if i + 1 < n and s[i + 1] == q:  # doubled-quote escape
-                        i += 2
-                        continue
-                    break
-                i += 1
-            i += 1
+    for a, b, quoted in _segments(s):
+        if quoted:
             continue
-        if ch == "-" and i + 1 < n and s[i + 1] == "-":
-            while i < n and s[i] != "\n":
-                i += 1
-            continue
-        if ch == "/" and i + 1 < n and s[i + 1] == "*":
-            j = s.find("*/", i + 2)
-            i = n if j < 0 else j + 2
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth = max(depth - 1, 0)
-        elif depth == 0:
-            mask[i] = True
-        i += 1
+        for i in range(a, b):
+            ch = s[i]
+            if ch == "(":
+                depth += 1
+            elif ch == ")":
+                depth = max(depth - 1, 0)
+            elif depth == 0:
+                mask[i] = True
     return mask
+
+
+def _close_paren(s: str, i: int) -> int:
+    """Index of the ``)`` closing the ``(`` at *i*, or -1."""
+    depth = 0
+    for a, b, quoted in _segments(s, i):
+        if quoted:
+            continue
+        for j in range(a, b):
+            if s[j] == "(":
+                depth += 1
+            elif s[j] == ")":
+                depth -= 1
+                if not depth:
+                    return j
+    return -1
 
 
 def _strip_sql_comments(s: str) -> str:
     """Replace -- line comments and /* */ block comments with a space,
     string-literal-aware. Rewritten statements are emitted as ONE line,
     so a surviving line comment would swallow everything after it."""
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            q = ch
-            j = i + 1
-            while j < n:
-                if s[j] == "\\" and q != "`":
-                    j += 2
-                    continue
-                if s[j] == q:
-                    if j + 1 < n and s[j + 1] == q:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(s[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        if ch == "-" and i + 1 < n and s[i + 1] == "-":
-            nl = s.find("\n", i)
-            out.append(" ")
-            i = n if nl < 0 else nl + 1
-            continue
-        if ch == "/" and i + 1 < n and s[i + 1] == "*":
-            e = s.find("*/", i + 2)
-            out.append(" ")
-            i = n if e < 0 else e + 2
-            continue
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    return "".join(
+        " " if quoted and s[a] in "-/" else s[a:b] for a, b, quoted in _segments(s)
+    )
 
 
 def _split_top_commas(s: str) -> list[str]:
@@ -426,45 +440,19 @@ def _norm_expr(s: str) -> str:
     folding a literal's case (or collapsing its internal whitespace)
     would falsely equate GROUP BY f('A') / f('a  b') with a select key
     f('a') / f('a b') and rewrite to the wrong grouping."""
-    out: list[str] = []
-    seg: list[str] = []  # pending non-quoted run
-    i, n = 0, len(s)
 
-    def flush() -> None:
-        if seg:
-            # collapse whitespace within the non-quoted run; single
-            # spaces at the run edges keep token separation stable
-            txt = "".join(seg)
-            collapsed = " ".join(txt.split())
-            if txt[:1].isspace() and collapsed:
-                collapsed = " " + collapsed
-            if txt[-1:].isspace() and collapsed.strip():
-                collapsed = collapsed + " "
-            out.append(collapsed)
-            seg.clear()
+    def collapse(txt: str) -> str:
+        # single spaces at the run edges keep token separation stable
+        out = " ".join(txt.lower().split())
+        if txt[:1].isspace() and out:
+            out = " " + out
+        if txt[-1:].isspace() and out.strip():
+            out = out + " "
+        return out
 
-    while i < n:
-        ch = s[i]
-        if ch in ("'", '"', "`"):
-            flush()
-            j = i + 1
-            while j < n:
-                if s[j] == "\\" and ch != "`":  # _top_mask's escape rule
-                    j += 2
-                    continue
-                if s[j] == ch:
-                    if j + 1 < n and s[j + 1] == ch:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(s[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        seg.append(ch.lower())
-        i += 1
-    flush()
-    return "".join(out).strip()
+    return "".join(
+        s[a:b] if quoted else collapse(s[a:b]) for a, b, quoted in _segments(s)
+    ).strip()
 
 
 def _clause_spans(s: str):
@@ -486,16 +474,6 @@ def _rewrite_select(
     [GROUP BY keys]) onto the two-phase built-in SQL. Returns None when
     the shape is not provably that pattern (caller falls back)."""
     s = sql.strip().rstrip(";").strip()
-    # drop leading comments so the SELECT-at-position-0 check sees code
-    while True:
-        if s.startswith("--"):
-            nl = s.find("\n")
-            s = "" if nl < 0 else s[nl + 1 :].lstrip()
-        elif s.startswith("/*"):
-            e = s.find("*/")
-            s = "" if e < 0 else s[e + 2 :].lstrip()
-        else:
-            break
     spans = _clause_spans(s)
     if not spans:
         return None
@@ -541,24 +519,7 @@ def _rewrite_select(
             # whole item must be the call plus an alias: find the
             # matching close paren of the call's open paren
             open_i = it.index("(", m.start(1))
-            depth, close_i = 0, -1
-            j = open_i
-            it_mask_src = it
-            while j < len(it_mask_src):
-                c = it_mask_src[j]
-                if c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                    if depth == 0:
-                        close_i = j
-                        break
-                elif c in ("'", '"', "`"):
-                    q = c
-                    j += 1
-                    while j < len(it_mask_src) and it_mask_src[j] != q:
-                        j += 1
-                j += 1
+            close_i = _close_paren(it, open_i)
             if close_i < 0:
                 return None
             rest = it[close_i + 1 :].strip()
@@ -690,7 +651,10 @@ def _rewrite_select(
                     }
                 except Exception:
                     src_cols = None
-        stripped = _re.sub(r"'(?:[^'\\]|\\.)*'", " ", having_text)
+        stripped = "".join(
+            " " if quoted and having_text[a] == "'" else having_text[a:b]
+            for a, b, quoted in _segments(having_text)
+        )
         sql_words = {
             "and", "or", "not", "in", "between", "like", "rlike",
             "ilike", "is", "null", "true", "false", "escape", "exists",
@@ -749,58 +713,20 @@ def _split_ctes(sql: str):
         return None
     i = m.end()
     ctes = []
-    n = len(s)
     while True:
         mm = _re.match(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s+as\s*\(", s[i:], _re.I)
         if not mm:
             return None
         name = mm.group(1)
         body_start = i + mm.end()  # position just after '('
-        depth = 1
-        j = body_start
-        while j < n and depth:
-            c = s[j]
-            if c in ("'", '"', "`"):
-                q = c
-                j += 1
-                while j < n:
-                    # mirror _top_mask's escape handling — the two
-                    # scanners must agree on where strings end
-                    if s[j] == "\\" and q != "`":
-                        j += 2
-                        continue
-                    if s[j] == q:
-                        if j + 1 < n and s[j + 1] == q:
-                            j += 2
-                            continue
-                        break
-                    j += 1
-            elif c == "-" and j + 1 < n and s[j + 1] == "-":
-                # line comment: a stray paren inside would desync depth
-                while j < n and s[j] != "\n":
-                    j += 1
-                continue
-            elif c == "/" and j + 1 < n and s[j + 1] == "*":
-                e = s.find("*/", j + 2)
-                j = n if e < 0 else e + 2
-                continue
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if not depth:
-                    break
-            j += 1
-        if depth:
+        j = _close_paren(s, body_start - 1)
+        if j < 0:
             return None
         ctes.append((name, s[body_start:j]))
-        k = j + 1
-        while k < n and s[k].isspace():
-            k += 1
-        if k < n and s[k] == ",":
-            i = k + 1
-            continue
-        return ctes, s[k:]
+        comma = _re.match(r"\s*,", s[j + 1 :])
+        if comma is None:
+            return ctes, s[j + 1 :].lstrip()
+        i = j + 1 + comma.end()
 
 
 def rewrite_topn_sql(

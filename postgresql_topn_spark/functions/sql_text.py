@@ -2,10 +2,10 @@
 exposed to pure ``spark.sql()`` users through Spark SQL UDFs
 (``CREATE TEMPORARY FUNCTION ... RETURNS ... RETURN <expr>``).
 
-Unlike the Python UDF/UDAF shims in functions/sql_api.py (which exist
-for topn API parity and carry a documented performance contract), SQL
-UDFs have NO Python anywhere: Catalyst inlines the RETURN expression
-into the calling plan at analysis time, so
+Like the topn scalar and table functions in functions/sql_api.py (whose
+GROUPED_AGG UDAFs alone stay Python, since SQL cannot define an
+aggregate), SQL UDFs have NO Python anywhere: Catalyst inlines the
+RETURN expression into the calling plan at analysis time, so
 ``SELECT quality_score(text) FROM docs`` plans as the same
 whole-stage-codegen projection as the Column API — full scan speed on
 a 1000-executor cluster, usable by BI tools and SQL-only consumers.

@@ -629,7 +629,9 @@ def topn_sql_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliding-frame query (sql/customer_reviews_query.sql:59-68,
     ``topn_union_agg(sk) OVER (ORDER BY day ROWS 6 PRECEDING)``) runs
     verbatim — aggregate, frame-merge and lateral extraction all in
-    SQL."""
+    SQL. The aggregate and the frame-merge are the GROUPED_AGG UDAFs
+    (SQL cannot define an aggregate); the lateral ``topn()`` is a SQL
+    table function, a Generate in the JVM."""
     from postgresql_topn_spark.functions.sql_api import register_sql_functions
 
     register_sql_functions(spark, counters=C)
@@ -1321,8 +1323,8 @@ def topn_sql_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
       README.md:84-96; sql/customer_reviews_query.sql:12-40) through
       ``topn_sql()``, which rewrites both aggregate CTEs onto the
       two-phase pure-built-in plan (map-side partial combine, zero
-      Python below the extraction); only the bounded-sketch ``topn()``
-      UDTF extraction stays Python.
+      Python stages); the ``topn()`` extraction is a SQL table
+      function that plans as a Generate over the sketch rows.
     - lane 'generated_sql': the generated-SQL surface WITHOUT any
       Python stage at all — monthly sketches by topn_add_agg_sql
       (salted variant), merged per year by topn_union_agg_sql,
@@ -1498,9 +1500,9 @@ def topn_sql_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``topn()`` — same results as the Column-API twin
     (suite.topn_revenue_products), proving the surfaces agree. Runs
     through ``topn_sql()``, which rewrites the weighted aggregate CTE
-    onto the two-phase built-in plan (topn_weighted_agg_sql): the raw
-    lineitem rows never cross into Python — only the bounded sketch
-    rows reach the ``topn()`` UDTF extraction."""
+    onto the two-phase built-in plan (topn_weighted_agg_sql), and the
+    ``topn()`` extraction is a SQL table function: no row crosses into
+    Python."""
     from postgresql_topn_spark.functions.sql_api import topn_sql
 
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(

@@ -166,24 +166,17 @@ def test_small_dim_join_broadcasts(spark):
 
 def test_no_suite_query_uses_row_at_a_time_python(spark):
     """Sweep EVERY declared suite query: none may plan a BatchEvalPython
-    node (row-at-a-time Python UDF — the 10-100x-slower lane). Python is
-    allowed only as Arrow-batched stages (MapInPandas / ArrowEvalPython /
-    grouped-map), and only a bounded number of them (the dedup/ANN
-    operators budget 1-2 per query). Exception: the SQL-parity queries
-    (topn_sql_*) exercise the registered UDTF, which plans as
-    BatchEvalPythonUDTF — allowed there ONLY above the aggregate, where
-    it touches a handful of sketch rows, never the raw fact rows."""
+    or BatchEvalPythonUDTF node (row-at-a-time Python UDF or UDTF — the
+    10-100x-slower lane; the SQL-parity queries' lateral ``topn()`` is a
+    SQL table function). Python is allowed only as Arrow-batched stages
+    (MapInPandas / ArrowEvalPython / grouped-map), and only a bounded
+    number of them (the dedup/ANN operators budget 1-2 per query)."""
     from postgresql_topn_spark.plans.audit import plan_str
     from postgresql_topn_spark.suite import QUERIES
 
     for name, fn in QUERIES.items():
         p = plan_str(fn(spark, SF), "simple")
-        scalar_evals = p.count("BatchEvalPython") - p.count("BatchEvalPythonUDTF")
-        assert scalar_evals == 0, f"{name} plans a row-at-a-time UDF"
-        if not name.startswith("topn_sql_"):
-            assert "BatchEvalPythonUDTF" not in p, (
-                f"{name} plans a Python UDTF outside the SQL-parity surface"
-            )
+        assert "BatchEvalPython" not in p, f"{name} plans a row-at-a-time UDF"
         n_arrow = sum(
             p.count(n)
             for n in ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
@@ -285,6 +278,28 @@ def test_sql_twophase_no_python_with_partial_combine(spark):
     )
     assert python_stages(df) == 0
     assert has_partial_aggregate(df)
+
+
+def test_sql_gates_extract_in_the_jvm(spark):
+    """The SQL-front-door gates' lateral ``topn()`` plans as a Generate
+    over the sketch rows. The only Python left is the GROUPED_AGG UDAFs
+    SQL cannot define: topn_sql_window's aggregate and OVER frame, and
+    the deliberate fallback lane of topn_sql_having."""
+    import re
+
+    from postgresql_topn_spark.suite import QUERIES
+
+    found = {}
+    for name in ("topn_sql_window", "topn_sql_agg", "topn_sql_weighted", "topn_sql_having"):
+        p = plan_str(QUERIES[name](spark, SF), "simple")
+        assert "Generate inline" in p, name
+        found[name] = set(re.findall(r"\w*(?:Python|Pandas)\w*", p))
+    assert found == {
+        "topn_sql_window": {"ArrowAggregatePython", "ArrowWindowPython"},
+        "topn_sql_agg": set(),
+        "topn_sql_weighted": set(),
+        "topn_sql_having": {"ArrowAggregatePython"},
+    }
 
 
 def test_bm25_zero_python_three_shuffles(spark):

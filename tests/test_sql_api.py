@@ -1,5 +1,5 @@
-"""spark.sql() surface: registered topn UDTF/UDFs and the CSV ingestion
-path (sql/copy_data.sql parity)."""
+"""spark.sql() surface: registered topn SQL functions and UDAFs, and the
+CSV ingestion path (sql/copy_data.sql parity)."""
 
 from __future__ import annotations
 
@@ -39,6 +39,8 @@ def test_topn_udtf_lateral(sql_session):
 def test_topn_udtf_n_gt_counters_errors(sql_session):
     with pytest.raises(Exception, match="number of counters"):
         sql_session.sql("SELECT * FROM topn(map('a', 1L), 1001)").collect()
+    with pytest.raises(Exception, match="number of counters"):
+        sql_session.sql("SELECT topn_entries(map('a', 1L), 3000000000)").collect()
 
 
 def test_topn_add_union_sql(sql_session):
@@ -93,6 +95,124 @@ def test_topn_weighted_agg_sql(sql_session):
     ).collect()
     # NULL weight -> 0 total -> dropped; NULL item skipped
     assert rows[0].sk == {"a": 15}
+
+
+def test_sql_scalars_equal_column_forms(spark):
+    """SQL ``topn_add`` / ``topn_union`` / ``topn_entries`` / LATERAL
+    ``topn`` equal their Column forms (functions/sketch.py) over seeded
+    rows: boolean, double and date items (stringified by Spark's cast on
+    both surfaces), NULL sketches and items, 256-byte items whose
+    255-byte cut falls mid-character, INT64_MAX frequencies, sketches
+    over the budget, and n in {-1, 0, NULL, counters}."""
+    import datetime
+    import random
+
+    from postgresql_topn_spark.functions import sketch as S
+
+    c, i64 = 4, (1 << 63) - 1
+    rng = random.Random(8)
+    cut = "я" * 127  # what "я" * 128 (256 bytes) truncates to
+    keys = ["true", "false", "1.0E20", "-0.5", "2024-01-02", "x", cut]
+
+    def sk():
+        if rng.random() < 0.15:
+            return None
+        picked = rng.sample(keys, rng.randrange(0, 6))
+        return {k: rng.choice([1, 2, 3, i64 - 1, i64]) for k in picked}
+
+    rows = [
+        (
+            i,
+            sk(),
+            sk(),
+            rng.choice([True, False, None]),
+            rng.choice([1e20, -0.5, 2.0, None]),
+            rng.choice([datetime.date(2024, 1, 2), datetime.date(1999, 12, 31), None]),
+            rng.choice(["x", "y", "я" * 128, "я" * 127 + "z", None]),
+        )
+        for i in range(80)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id int, a map<string,bigint>, b map<string,bigint>, flag boolean, "
+        "dbl double, day date, s string",
+    )
+    df.createOrReplaceTempView("parity_in")
+
+    def sql(text, order="1"):
+        return [tuple(r) for r in spark.sql(f"{text} ORDER BY {order}").collect()]
+
+    def col(*cols):
+        return [tuple(r) for r in df.select("id", *cols).orderBy("id").collect()]
+
+    register_sql_functions(spark, counters=c)
+    try:
+        for item in ("flag", "dbl", "day", "s"):
+            assert sql(f"SELECT id, topn_add(a, {item}) FROM parity_in") == col(
+                S.topn_add("a", item, counters=c)
+            ), item
+        assert sql("SELECT id, topn_union(a, b) FROM parity_in") == col(
+            S.topn_union("a", "b", counters=c)
+        )
+        for n in (-1, 0, c):
+            assert sql(f"SELECT id, topn_entries(a, {n}) FROM parity_in") == col(
+                S.topn_entries("a", n, counters=c)
+            ), n
+            lateral = sql(
+                "SELECT id, t.item, t.frequency FROM parity_in, "
+                f"LATERAL topn(parity_in.a, {n}) t",
+                order="1, 3 DESC, 2",
+            )
+            exploded = S.explode_topn(df, "a", n, keep=["id"], counters=c)
+            assert lateral == [
+                tuple(r) for r in exploded.orderBy("id", F.desc("frequency"), "item").collect()
+            ], n
+        # a NULL n has no Column form: NULL entries, no rows
+        assert {r[1] for r in sql("SELECT id, topn_entries(a, NULL) FROM parity_in")} == {None}
+        assert sql("SELECT id FROM parity_in, LATERAL topn(parity_in.a, NULL) t") == []
+    finally:
+        register_sql_functions(spark, counters=1000)
+
+
+def test_registration_skips_an_unchanged_budget(spark, monkeypatch):
+    """topn_sql registers on every statement that names a topn function:
+    an unchanged budget issues no CREATE, a changed one re-creates every
+    SQL function with the new budget spliced in."""
+    session = spark.newSession()
+    statements = []
+    orig_sql = session.sql
+    monkeypatch.setattr(
+        session, "sql", lambda q, *a, **k: statements.append(q) or orig_sql(q, *a, **k)
+    )
+    register_sql_functions(session, counters=2)
+    created = len(statements)
+    assert created == 4
+    register_sql_functions(session, counters=2)
+    assert len(statements) == created
+    union = "SELECT topn_union(map('a', 5L, 'b', 3L, 'c', 1L), map()) AS sk"
+    assert orig_sql(union).collect()[0].sk == {"a": 5, "b": 3}
+    register_sql_functions(session, counters=3)
+    assert len(statements) == 2 * created
+    assert orig_sql(union).collect()[0].sk == {"a": 5, "b": 3, "c": 1}
+
+
+def test_sql_bodies_reuse_the_sql_twins():
+    """No row-at-a-time Python is registered, and the SQL bodies take
+    their ranking and byte-cap text from the Column forms' SQL twins
+    rather than a copy of their own."""
+    import inspect
+
+    from postgresql_topn_spark.functions import sql_api
+    from postgresql_topn_spark.functions.aggregates import _normalize_sql
+    from postgresql_topn_spark.functions.sketch import ENTRY_CMP_SQL
+
+    src = inspect.getsource(sql_api)
+    assert "@udf" not in src and "@udtf" not in src
+    assert "frequency >" not in src and "octet_length" not in src
+    defs = sql_api._function_defs(7)
+    for name in ("topn", "topn_entries", "topn_add", "topn_union"):
+        assert ENTRY_CMP_SQL in defs[name], name
+    assert _normalize_sql("item") in defs["topn_add"]
 
 
 def test_topn_agg_sql_prunes_to_counters(spark):
@@ -669,6 +789,14 @@ def test_rewriter_literal_case_and_duplicate_clauses():
             "SELECT g, topn_add_agg(i) AS sk FROM t WHERE x WHERE y GROUP BY g"
         )
         is None
+    )
+    # a backslash-escaped quote inside the aggregate's argument must
+    # not end the literal for the scan that finds the call's close paren
+    assert (
+        rewrite_topn_sql(
+            "SELECT g, topn_add_agg(concat(item, '\\'')) AS t FROM src GROUP BY g"
+        )
+        is not None
     )
     # (c) a comment containing a stray ')' inside a CTE body must not
     # desync the paren scanner, and a leading comment must not block
