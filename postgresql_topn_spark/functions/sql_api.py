@@ -62,6 +62,7 @@ from __future__ import annotations
 
 import weakref
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import PandasUDFType, pandas_udf
@@ -190,6 +191,15 @@ def _function_defs(c: int) -> dict[str, str]:
     }
 
 
+def _item_key(item) -> str:
+    """A UDAF item as the key Spark's ``cast(item AS STRING)`` gives the
+    rewritten statement: booleans are ``true``/``false``, not Python's
+    ``True``/``False``. Floating-point items keep Python's repr."""
+    if isinstance(item, (bool, np.bool_)):
+        return "true" if item else "false"
+    return truncate_key_bytes(str(item))
+
+
 def register_sql_functions(spark: SparkSession, *, counters: int | None = None) -> None:
     """Register the topn surface for ``spark.sql()`` sessions.
 
@@ -230,7 +240,7 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
         for it in items:
             if it is None:
                 continue
-            k = truncate_key_bytes(str(it))
+            k = _item_key(it)
             counts[k] = counts.get(k, 0) + 1
         return pack_counts(counts, c)
 
@@ -269,7 +279,7 @@ def register_sql_functions(spark: SparkSession, *, counters: int | None = None) 
         for it, w in zip(items, weights):
             if it is None:
                 continue
-            k = truncate_key_bytes(str(it))
+            k = _item_key(it)
             totals[k] = totals.get(k, 0) + weight_to_long(w)
         return pack_counts(totals, c, drop_nonpositive=True)
 

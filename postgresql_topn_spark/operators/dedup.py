@@ -79,8 +79,9 @@ def spread_small_scan(src: DataFrame, slim: DataFrame) -> DataFrame:
     spark = src.sparkSession
     # global opt-out (r14): the VERDICT r13 watchlist asked for a
     # fresh-JVM A/B lever for the spread sites; 'false' restores the
-    # pre-r13 unspread plans everywhere. Values are identical either
-    # way (a round-robin exchange is placement only).
+    # pre-r13 unspread plans everywhere. Exact values are the same
+    # either way (a round-robin exchange is placement only), but a
+    # Tier-2 sketch under eviction depends on its partial-state fan-out.
     if not knob(spark, SPREAD_ENABLED):
         return slim
     target = spark.sparkContext.defaultParallelism

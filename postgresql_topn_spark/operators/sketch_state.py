@@ -30,7 +30,7 @@ combine via serialize/deserialize/union_internal, topn.c:509-625):
   DESC, item ASC) entry order, like Tier-1.
 
 Every Python lane of the package (these merges, the streaming
-snapshot, the registered SQL UDFs and UDAFs) finishes through
+snapshot, the three registered SQL UDAFs) finishes through
 :func:`pack_counts`: it saturates each exact total into int64 before it
 ranks and cuts, as the reference saturates on every add
 (topn.c:997-1009) before ``PruneHashTable`` ranks (topn.c:869-908). So

@@ -31,8 +31,8 @@ two metadata ops. On object stores, where "rename" is copy+delete and
 that window grows with table size, use `versioned_rewrite` +
 `current_table_path` instead: versions commit by creating one tiny
 `_COMMITTED` marker (atomic PUT), there is no rename anywhere, and a
-crash at any step leaves the previous version current — the same
-marker pattern stream_bloom_dedup ships for its filter versions. The
+crash at any step leaves the previous version current;
+stream_bloom_dedup keeps its filter versions this way. The
 price is that readers resolve the path through `current_table_path`.
 Strict snapshot isolation across many tables still wants the
 table-format route — Delta/Iceberg; these helpers are the raw-parquet
@@ -41,8 +41,6 @@ tier.
 
 from __future__ import annotations
 
-import os
-import shutil
 import uuid
 
 from pyspark.sql import SparkSession
@@ -84,7 +82,7 @@ def _hadoop_staged_rewrite(write_fn, path, staging, backup, fs, jpath) -> None:
 def _list_versions(fs, jpath, root: str):
     """(committed, uncommitted) sorted version lists of a versioned
     table root: ``v=N`` dirs are committed iff their ``_COMMITTED``
-    marker exists (the stream_bloom_dedup filter-versioning pattern)."""
+    marker exists."""
     committed: list[int] = []
     uncommitted: list[int] = []
     if not fs.exists(jpath(root)):
@@ -178,7 +176,7 @@ def current_table_path(spark: SparkSession, root: str) -> "str | None":
     return f"{root.rstrip('/')}/v={committed[-1]}" if committed else None
 
 
-def _staged_rewrite(write_fn, path: str, spark: "SparkSession | None" = None) -> None:
+def _staged_rewrite(write_fn, path: str, spark: SparkSession) -> None:
     """Write into a sibling staging dir, then swap via two renames.
 
     Failure behavior (review pins): a failed write cleans up its
@@ -190,36 +188,16 @@ def _staged_rewrite(write_fn, path: str, spark: "SparkSession | None" = None) ->
     the renames (posix rename is atomic per call, not across two) —
     retry-on-missing, or use a table format for strict isolation.
 
-    With a ``spark`` session the swap runs through the Hadoop FS API,
-    so any scheme Spark can write (file/hdfs/s3a) can be compacted —
-    the os/shutil form only ever worked on local paths while the
-    janitor CLI advertised object-store dirs (r12 review). Object-store
-    caveat: Hadoop "rename" on S3A is copy+delete, so the missing-path
-    window is proportional to table size there — the table-format
-    escape hatch in the module docstring applies doubly."""
+    The swap runs through the Hadoop FS API, so any scheme Spark can
+    write (file/hdfs/s3a) can be compacted. Object-store caveat: Hadoop
+    "rename" on S3A is copy+delete, so the missing-path window is
+    proportional to table size there — the table-format escape hatch in
+    the module docstring applies doubly."""
     staging = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
     backup = f"{path.rstrip('/')}__old"
-    if spark is not None:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path
-        fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-        _hadoop_staged_rewrite(write_fn, path, staging, backup, fs, jpath)
-        return
-    try:
-        write_fn(staging)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    if os.path.exists(backup):
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"stale backup {backup} exists — a previous swap crashed "
-            "between its renames; inspect/restore it (it holds the "
-            "last complete table) and delete it before rewriting"
-        )
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = jpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    _hadoop_staged_rewrite(write_fn, path, staging, backup, fs, jpath)
 
 
 def compact_topn_rollup(

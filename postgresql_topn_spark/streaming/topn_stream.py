@@ -639,11 +639,13 @@ def stream_bloom_dedup(
     - output is keyed by batch_id with dynamic partition OVERWRITE, so
       a replayed batch rewrites its own partition instead of appending
       duplicates;
-    - the filter is versioned (monotonic ``v=K`` dirs, committed only
-      when their ``_SUCCESS`` marker exists), never swapped in place: a
-      replayed batch reads the latest committed version and writes a
-      fresh one whose content is identical (OR-ing the same keys is
-      idempotent), a half-written version is invisible, version
+    - the filter is a versioned table (``sources.maintenance.
+      versioned_rewrite``: monotonic ``v=K`` dirs, committed only when
+      their ``_COMMITTED`` marker exists), never swapped in place: a
+      replayed batch reads the latest committed version
+      (``current_table_path``) and writes a fresh one whose content is
+      identical (OR-ing the same keys is idempotent), a half-written
+      version is invisible and swept by the next commit, version
       numbering is independent of batch ids so history survives
       checkpoint resets, and there is no rename window that can destroy
       accumulated history. Older versions are pruned best-effort after
@@ -667,72 +669,31 @@ def stream_bloom_dedup(
         # pruning the version a replayed batch would need to re-read
         # destroys history on the crash path this design exists for
         raise ValueError(f"keep_versions must be >= 2, got {keep_versions}")
-    import hashlib
-
     from postgresql_topn_spark.functions.bloom import (
         bloom_add_agg,
         bloom_merge,
         bloom_might_contain,
     )
+    from postgresql_topn_spark.sources.maintenance import (
+        current_table_path,
+        versioned_rewrite,
+    )
 
-    # Output rows are namespaced by a RUN id: same checkpoint (normal
-    # restarts) -> same namespace, so a replayed batch overwrites its
-    # own partition; a NEW/changed checkpoint restarts batch ids at 0,
-    # and without the namespace a fresh run's batch 0 would
-    # dynamic-overwrite the OLD run's batch-0 partition — silent loss
-    # of already-admitted rows. WITHOUT a durable checkpoint every
-    # process start replays from scratch with batch ids at 0, so the
-    # run id must be unique PER PROCESS (a path-derived id is constant
-    # across restarts and collides — review pin); within the process,
-    # foreachBatch retries of batch N still share the closure's id and
-    # stay overwrite-idempotent. The old run's output stays put and the
-    # shared filter still dedups across runs either way.
-    if checkpoint:
-        run_id = hashlib.md5(checkpoint.encode()).hexdigest()[:12]
-    else:
-        import uuid
-
-        run_id = uuid.uuid4().hex[:12]
-
-    def _fs(spark, path: str):
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-    def _versions(spark) -> list[int]:
-        """Committed filter versions: only dirs whose _SUCCESS marker
-        exists count, so a version that crashed mid-write is invisible
-        (monotonic numbering is independent of batch ids, so history
-        survives checkpoint resets/changes)."""
-        fs, jpath = _fs(spark, bloom_path)
-        if not fs.exists(jpath):
-            return []
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        out = []
-        for st in fs.listStatus(jpath):
-            name = st.getPath().getName()
-            if name.startswith("v="):
-                try:
-                    v = int(name[2:])
-                except ValueError:
-                    continue
-                # our own marker, written through the FS API after the
-                # parquet job: committer-independent (s3a setups often
-                # run with marksuccessfuljobs=false, which would make a
-                # _SUCCESS-only check see no version as committed, ever)
-                if fs.exists(jvm_path(f"{bloom_path}/v={v}/_COMMITTED")):
-                    out.append(v)
-        return sorted(out)
+    # Output rows are namespaced by a run id (_run_id): a replayed batch
+    # overwrites its own partition, and a fresh run's batch 0 cannot
+    # dynamic-overwrite an old run's batch-0 partition. The old run's
+    # output stays put and the shared filter still dedups across runs.
+    run_id = _run_id(checkpoint)
 
     def write_batch(batch_df, batch_id: int) -> None:
         spark = batch_df.sparkSession
         keyed = batch_df.withColumn(key_col, _col(key)).where(
             F.col(key_col).isNotNull()
         )
-        versions = _versions(spark)
-        have_filter = bool(versions)
+        current = current_table_path(spark, bloom_path)
+        have_filter = current is not None
         if have_filter:
-            fdf = spark.read.parquet(f"{bloom_path}/v={versions[-1]}")
+            fdf = spark.read.parquet(current)
             # geometry guard: probing a stored filter with different
             # m_bits/depth silently corrupts dedup in BOTH directions
             # (fresh rows wrongly dropped forever, or historical keys
@@ -793,24 +754,16 @@ def stream_bloom_dedup(
                 )
             else:
                 merged = delta
-            new_v = (versions[-1] + 1) if versions else 0
-            merged.select(
-                "bloom",
-                F.lit(m_bits).alias("m_bits"),
-                F.lit(depth).alias("depth"),
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{bloom_path}/v={new_v}"
+            versioned_rewrite(
+                merged.select(
+                    "bloom",
+                    F.lit(m_bits).alias("m_bits"),
+                    F.lit(depth).alias("depth"),
+                ).coalesce(1).write.mode("overwrite").parquet,
+                bloom_path,
+                spark,
+                keep_versions=keep_versions,
             )
-            fs, _ = _fs(spark, bloom_path)
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-            # commit marker via the FS API (committer-independent)
-            fs.create(
-                jvm_path(f"{bloom_path}/v={new_v}/_COMMITTED"), True
-            ).close()
-            # best-effort prune of stale versions (crash here only
-            # leaves extra versions around)
-            for v in versions[: max(0, len(versions) - (keep_versions - 1))]:
-                fs.delete(jvm_path(f"{bloom_path}/v={v}"), True)
         finally:
             fresh.unpersist()
 

@@ -681,7 +681,7 @@ def test_jsonl_reexport_fewer_shards_under_dynamic_mode(spark, tmp_path):
     assert back.count() == 40  # no stale shard rows
 
 
-def test_staged_rewrite_failure_cleanup_and_stale_backup(tmp_path):
+def test_staged_rewrite_failure_cleanup_and_stale_backup(spark, tmp_path):
     """A failed write cleans its staging dir; a stale backup from a
     crashed swap makes the next rewrite refuse loudly."""
     import os
@@ -699,7 +699,7 @@ def test_staged_rewrite_failure_cleanup_and_stale_backup(tmp_path):
         raise RuntimeError("boom")
 
     with pytest.raises(RuntimeError, match="boom"):
-        _staged_rewrite(bad_write, str(live))
+        _staged_rewrite(bad_write, str(live), spark)
     assert (live / "part-0").read_text() == "v1"
     assert not [p for p in tmp_path.iterdir() if "__staging" in p.name]
     # stale backup refusal
@@ -710,6 +710,6 @@ def test_staged_rewrite_failure_cleanup_and_stale_backup(tmp_path):
         os.makedirs(staging, exist_ok=True)
 
     with pytest.raises(RuntimeError, match="stale backup"):
-        _staged_rewrite(good_write, str(live))
+        _staged_rewrite(good_write, str(live), spark)
     assert (live / "part-0").read_text() == "v1"
     assert not [p for p in tmp_path.iterdir() if "__staging" in p.name]

@@ -1260,3 +1260,19 @@ def test_norm_expr_backslash_escape_keeps_literal_case():
     assert rewrite_topn_sql(sql, counters=10) is None
     # the same statement with matching literals still rewrites
     assert rewrite_topn_sql(sql.replace("'a\\'b'", "'a\\'B'"), counters=10)
+
+
+def test_udaf_boolean_items_key_like_the_rewrite(spark):
+    """A boolean item keys as Spark's cast does ('true'/'false') on the
+    UDAF lane too, so spark.sql and topn_sql give the same sketch, in
+    both the count and the weighted form."""
+    from postgresql_topn_spark.functions.sql_api import topn_sql
+
+    register_sql_functions(spark, counters=1000)
+    for call, want in (
+        ("topn_add_agg(x)", {"true": 2, "false": 1}),
+        ("topn_weighted_agg(x, 3)", {"true": 6, "false": 3}),
+    ):
+        sql = f"SELECT {call} AS sk FROM VALUES (true), (false), (true), (NULL) AS t(x)"
+        assert dict(spark.sql(sql).first().sk) == want
+        assert dict(topn_sql(spark, sql).first().sk) == want

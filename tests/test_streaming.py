@@ -1048,3 +1048,45 @@ def test_stream_rollup_text_matches_batch_writer(spark, tmp_path):
         for p in (batch, stream_rollup)
     ]
     assert texts == [['{"a":1,"bb":2}'], ['{"a":1,"bb":2}']]
+
+
+def test_stream_bloom_dedup_sweeps_uncommitted_filter_versions(spark, tmp_path):
+    """The filter is a `versioned_rewrite` table: a batch over a bloom
+    path holding a committed v=0 and an orphan v=5 without its marker
+    (a crash between data write and commit) reads v=0 and leaves no
+    uncommitted version behind."""
+    import glob
+    import os
+
+    from postgresql_topn_spark.streaming.topn_stream import stream_bloom_dedup
+
+    out_path = str(tmp_path / "out")
+    bloom_path = str(tmp_path / "bloom")
+
+    def one_batch(name, keys):
+        src = str(tmp_path / name)
+        df = spark.createDataFrame(list(enumerate(keys)), "i long, content string")
+        df.coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema(df.schema).parquet(src)
+        q = (
+            stream_bloom_dedup(
+                stream, F.col("content"), out_path=out_path,
+                bloom_path=bloom_path, m_bits=1 << 14,
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    one_batch("in0", ["a", "b"])
+    orphan = os.path.join(bloom_path, "v=5")
+    os.makedirs(orphan)
+    open(os.path.join(orphan, "part-0.parquet"), "w").close()
+    one_batch("in1", ["b", "c"])
+
+    versions = glob.glob(os.path.join(bloom_path, "v=*"))
+    assert versions and all(
+        os.path.exists(os.path.join(v, "_COMMITTED")) for v in versions
+    ), sorted(versions)
+    keys = sorted(r.content_key for r in spark.read.parquet(out_path).collect())
+    assert keys == ["a", "b", "c"]
