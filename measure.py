@@ -11,7 +11,8 @@ layers: best of N runs, split into build (the gate function, eager jobs
 included) and exec (bench.py's ``.count()``), with the Spark work of
 that run from its event log. Jobs carry the gate as job group and
 ``build``/``exec`` as description; a job outside the group counts as
-untagged, one Spark re-described (file listing) as other.
+untagged, one Spark re-described (file listing) as other. Tasks of
+stages that run a Python exec node are counted apart.
 ab: every arm over the gates per trial, arm order reversed every other
 trial; ``--cold`` runs each arm of each trial in a fresh process.
 plans: each gate's masked physical plan before execution, one file per
@@ -44,6 +45,10 @@ sys.path.insert(0, HERE)
 from perfbench import tracing  # noqa: E402
 
 PHASES = ("build", "exec")
+# RDD scope names of Spark's Python exec nodes; seen on Spark 4.1:
+# MapInPandas, MapInArrow, FlatMapGroupsInPandas, ArrowEvalPython,
+# BatchEvalPython and ArrowAggregatePython (a pandas UDAF)
+PYTHON_NODE = re.compile(r"InPandas|InArrow|Python")
 
 
 def session(cpus: int):
@@ -148,6 +153,28 @@ def job_counts(events: list[dict], gate: str) -> dict[str, int]:
     return out
 
 
+def python_tasks(events: list[dict], gate: str) -> int:
+    """Tasks run by the gate's stages whose RDD scopes name a Python
+    exec node: each pays the fixed Python-worker cost (README
+    "Deployment")."""
+    gate_stages: set[int] = set()
+    python_stages: set[int] = set()
+    n = 0
+    for e in events:
+        kind = e.get("Event")
+        if kind == "SparkListenerJobStart":
+            if (e.get("Properties") or {}).get("spark.jobGroup.id") == gate:
+                gate_stages.update(e.get("Stage IDs", ()))
+        elif kind == "SparkListenerStageSubmitted":
+            info = e["Stage Info"]
+            scopes = (json.loads(r["Scope"])["name"] for r in info.get("RDD Info", ()) if r.get("Scope"))
+            if any(PYTHON_NODE.search(name) for name in scopes):
+                python_stages.add(info["Stage ID"])
+        elif kind == "SparkListenerTaskEnd":
+            n += e["Stage ID"] in python_stages and e["Stage ID"] in gate_stages
+    return n
+
+
 def layers(spark, sf_dir: str, gate: str, runs: int = 3, cprofile: bool = False) -> dict:
     """The best of ``runs`` runs of ``gate`` and its Spark work; the
     best run's events and build profile ride along under ``_events``
@@ -170,6 +197,7 @@ def layers(spark, sf_dir: str, gate: str, runs: int = 3, cprofile: bool = False)
         "runs": per_run,
         "jobs": jobs,
         **{k: work.get(k, 0) for k in ("stages", "tasks", "task_run_s", "task_cpu_s", "max_task_ms")},
+        "python_tasks": python_tasks(events, gate),
         "task_s_by_phase": work.get("run_s_by_span", {}),
         "_events": events,
         "_profile": profile,
@@ -350,7 +378,7 @@ def main(argv=None) -> None:
         detail = "  ".join(f"[build {b:.2f}s + exec {e:.2f}s, {n} jobs]" for b, e, n in row["runs"])
         print(f"{g}: best {row['build_s'] + row['exec_s']:.2f}s  {detail}", flush=True)
         print(f"  jobs build {j['build']} exec {j['exec']} other {j['other']} untagged {j['untagged']}; "
-              f"stages {row['stages']}, tasks {row['tasks']}, task cpu {row['task_cpu_s']:.2f}s, "
+              f"stages {row['stages']}, tasks {row['tasks']} ({row['python_tasks']} Python), task cpu {row['task_cpu_s']:.2f}s, "
               f"longest task {row['max_task_ms']}ms", flush=True)
         if args.jobs:
             print("\n".join(job_lines(events)), flush=True)

@@ -44,17 +44,18 @@ deterministic (frequency DESC, item ASC) so eviction decisions do not
 depend on shuffle arrival order — the reference is order-dependent and
 nondeterministic here; we pin determinism as a documented deviation.
 
-Under eviction the answer depends on how many partial states phase 1
-fans out to, which ``spread_small_scan`` sets to ``defaultParallelism``:
-dropping that spread on perfbench ``bounded``'s 40k-row batches cut CPU
-per op from 2,069 to 1,311 ms but took top-k recall from 1.0 to 0.969
-and the mean relative frequency error from 0.0104 to 0.0137, so a floor
-on work per Python task must leave this fan-out alone or show accuracy
-holds.
+Phase 1 pre-combines each Arrow batch and adds its (group, item) sums
+in (total DESC, item ASC) order (see :func:`_partial_fn`), so under
+eviction the heavy items of a batch are never half counted, whatever
+the number of partial tasks. That number is set by ``spread_small_scan``
+with a floor of ``spark.sql.files.openCostInBytes`` per task: every
+Python task pays a fixed worker cost (README "Deployment"), so a scan
+under 4 MB runs one partial task rather than ``defaultParallelism``.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 from collections.abc import Iterator, Sequence
 from decimal import ROUND_HALF_UP, Decimal
@@ -65,7 +66,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from postgresql_topn_spark.conf import INT64_MAX, resolve_counters
+from postgresql_topn_spark.conf import INT64_MAX, resolve_counters, size_bytes
 from postgresql_topn_spark.functions.aggregates import _caller_names
 from postgresql_topn_spark.functions.sketch import _col
 
@@ -238,21 +239,35 @@ def _merge_fn(gnames: Sequence[str], counters: int, *, drop_nonpositive: bool):
 
 def _partial_fn(gnames: Sequence[str], counters: int, *, weighted: bool):
     """Phase-1 mapInPandas partial for BOTH the counting and weighted
-    lanes: one bounded state per (group, input partition). Shared on
-    purpose — the NaN group-key normalization (NaN != NaN would
-    fragment NULL numeric group keys into one state PER ROW, unbounded
-    memory), the NULL-item skip and the group-preserving ``(key, None,
-    0)`` marker row must live in exactly one place (review pin: two
-    hand-kept copies drifted).
+    lanes: one bounded state per (group, input partition), fed by one
+    loop. Shared on purpose — the NaN group-key normalization (NaN !=
+    NaN would fragment NULL numeric group keys into one state PER ROW,
+    unbounded memory), the NULL-item skip and the group-preserving
+    ``(key, None, 0)`` marker row must live in exactly one place
+    (review pin: two hand-kept copies drifted).
 
-    Weighted lane: per-row rounding FIRST (the three-surface
-    semantics), then a per-batch pre-combine — one exact int sum per
-    (group, item) and ONE state add per pair, the same map-side combine
-    the reference's per-worker partials do. Identical in the
-    no-eviction regime; under eviction arrival batching was already
-    arbitrary (partition splits). Emitted ``__freq`` values are EXACT
-    Python ints (the weighted mid-schema is decimal(38,0), so partials
-    never clamp — parity with Tier-1's sum-exact-clamp-once)."""
+    Per Arrow batch, each (group, item) is summed exactly: the counting
+    lane is the weighted lane with weight 1; the weighted lane rounds
+    each row FIRST (the three-surface semantics). Items are truncated
+    to 255 bytes before they combine, NULL items and zero weights add
+    nothing. Each group's pairs then go to its state in ``_rank_cut``'s
+    order (total DESC, item ASC), one add per pair: the reference's
+    MergeTopn of the batch's exact sums (topn.c:955-990), as phase 2
+    merges partials. It equals the reference's transition over the
+    same rows arriving in runs of equal items, heaviest run first — it
+    prunes only when a NEW item is inserted (topn.c:440-446), so a run
+    of k rows is one add of their sum — except where a prune fires on a
+    run's first row: the transition ranks that item at its first row's
+    count, the merge at the run's sum. So a prune drops the batch's
+    tail items rather than half-counted heavy ones. Any order gives the
+    same states in the no-eviction regime.
+
+    Memory: the per-batch sums hold at most
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` pairs, whatever the
+    item cardinality; the states stay within 3 x counters per group.
+    Emitted ``__freq`` values are EXACT Python ints (the weighted
+    mid-schema is decimal(38,0), so partials never clamp — parity with
+    Tier-1's sum-exact-clamp-once)."""
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states: dict[tuple, TopnState] = {}
@@ -264,35 +279,30 @@ def _partial_fn(gnames: Sequence[str], counters: int, *, weighted: bool):
                 )
                 for key in zip(*[pdf[g] for g in gnames])
             ]
-            if weighted:
-                wvs = weights_to_long_vec(
+            wvs = (
+                weights_to_long_vec(
                     pd.to_numeric(pdf["__w"], errors="coerce").to_numpy(
                         dtype=float, na_value=float("nan")
                     )
-                )
-                batch_acc: dict[tuple, dict[str, int]] = {}
-                for key, it, wv in zip(keys, pdf["__item"], wvs):
-                    if key not in states:
-                        states[key] = TopnState(counters)
-                    if it is None or (isinstance(it, float) and pd.isna(it)):
-                        continue  # NULL items skipped, group preserved
-                    if wv:
-                        acc = batch_acc.setdefault(key, {})
-                        k = truncate_key_bytes(it)
-                        acc[k] = acc.get(k, 0) + int(wv)
-                for key, items in batch_acc.items():
-                    st = states[key]
-                    for it, v in items.items():
-                        if v != 0:
-                            st.add(it, v, aggregate_path=True)
-            else:
-                for key, it in zip(keys, pdf["__item"]):
-                    st = states.get(key)
-                    if st is None:
-                        st = states[key] = TopnState(counters)
-                    if it is None or (isinstance(it, float) and pd.isna(it)):
-                        continue  # NULL items skipped, group preserved
-                    st.add(truncate_key_bytes(it), 1, aggregate_path=True)
+                ).tolist()
+                if weighted
+                else itertools.repeat(1)
+            )
+            sums: dict[tuple, dict[str, int]] = {}
+            for key, it, wv in zip(keys, pdf["__item"], wvs):
+                acc = sums.get(key)
+                if acc is None:
+                    acc = sums[key] = {}  # the group is kept even if empty
+                if it is None or (isinstance(it, float) and pd.isna(it)) or not wv:
+                    continue
+                k = truncate_key_bytes(it)
+                acc[k] = acc.get(k, 0) + wv
+            for key, acc in sums.items():
+                st = states.get(key)
+                if st is None:
+                    st = states[key] = TopnState(counters)
+                for it, v in _rank_cut(acc.items(), len(acc)).items():
+                    st.add(it, v, aggregate_path=True)
         rows = []
         for key, st in states.items():
             if not st.counts:
@@ -374,8 +384,12 @@ def _item_agg_sketch(
         *([_col(weight).cast("double").alias("__w")] if weighted else []),
     )
     # the mapInPandas partial runs at the input's partitioning — spread
-    # a starved single-file scan so the Tier-1-style partial pass uses
-    # the whole cluster (no-op when the scan already splits).
+    # a starved few-file scan over more partial tasks (no-op when the
+    # scan already splits), but give each task at least Spark's own
+    # split floor, spark.sql.files.openCostInBytes: every Python task
+    # pays a fixed worker cost, so a scan under the floor runs ONE
+    # partial. The per-batch pre-combine, not the fan-out, keeps the
+    # answer under eviction (see _partial_fn).
     # `spread=False` opts out for callers that fan MANY lanes over the
     # same small source in one query: each lane's projection differs,
     # so the per-lane repartition exchanges don't dedupe and cost more
@@ -383,7 +397,13 @@ def _item_agg_sketch(
     if spread:
         from postgresql_topn_spark.operators.dedup import spread_small_scan
 
-        src = spread_small_scan(df, src)
+        src = spread_small_scan(
+            df,
+            src,
+            min_task_bytes=size_bytes(
+                df.sparkSession.conf.get("spark.sql.files.openCostInBytes", "4194304")
+            ),
+        )
     src, restore = _decimal_ride_keys(src, gnames)
     # weighted partials ride decimal(38,0), not bigint: totals stay EXACT
     # across the shuffle so the int64 saturation happens exactly once,

@@ -16,11 +16,19 @@ def test_layers_tags_every_job_build_or_exec(spark, sf_dir):
     assert jobs["other"] == 0 and jobs["untagged"] == 0, jobs
     assert row["runs"][0][2] == jobs["build"] + jobs["exec"]
     assert row["tasks"] >= row["stages"] >= 1
+    assert row["python_tasks"] == 0  # Tier 1 runs in the JVM
     assert set(row["task_s_by_phase"]) <= set(measure.PHASES)
     lines = measure.job_lines(row["_events"])
     assert sum(line.lstrip().startswith("job ") for line in lines) == jobs["exec"] + jobs["build"]
     # the tags are cleared once the gate has run
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_layers_counts_python_tasks(spark, sf_dir):
+    # each Tier-2 lane runs a MapInPandas partial and an
+    # applyInPandas (FlatMapGroupsInPandas) merge
+    row = measure.layers(spark, sf_dir, "topn_tier2_modes", runs=1)
+    assert 0 < row["python_tasks"] <= row["tasks"]
 
 
 def test_plans_dump_is_stable_after_masking(spark, sf_dir, tmp_path):

@@ -345,6 +345,181 @@ def test_weights_to_long_vec_bit_identical_to_scalar():
     assert list(got) == exp
 
 
+class TestPartialPreCombine:
+    """The Tier-2 partial sums each Arrow batch per (group, item) and
+    adds the sums in (total DESC, item ASC) order. Pinned, without
+    Spark, against the reference's transition run one row at a time
+    (``TopnState.add`` per row) over the same rows, each batch permuted
+    into runs of one (group, item), heaviest run first."""
+
+    LONG_A, LONG_B = "x" * 255 + "a", "x" * 255 + "b"  # one 255-byte key
+
+    @staticmethod
+    def _batch(groups: dict, seed: int):
+        """One shuffled batch from ``{group: [(item, [weight, ...])]}``."""
+        import numpy as np
+        import pandas as pd
+
+        rows = [(g, it, w) for g, runs in groups.items() for it, ws in runs for w in ws]
+        order = np.random.default_rng(seed).permutation(len(rows))
+        return pd.DataFrame([rows[i] for i in order], columns=["__g0", "__item", "__w"])
+
+    @staticmethod
+    def _partial(batches, counters, weighted):
+        import pandas as pd
+
+        from postgresql_topn_spark.operators.sketch_state import _partial_fn
+
+        out = {}
+        for pdf in _partial_fn(["__g0"], counters, weighted=weighted)(iter(batches)):
+            for g, it, fr in pdf.itertuples(index=False):
+                entries = out.setdefault(None if pd.isna(g) else g, {})
+                if it is not None:
+                    entries[it] = int(fr)
+        return out
+
+    @staticmethod
+    def _replay(batches, counters, weighted, *, runs=True):
+        """``TopnState.add`` per row; ``runs`` permutes each batch into
+        (batch total DESC, item ASC) runs, else rows keep file order."""
+        from postgresql_topn_spark.operators.sketch_state import weight_to_long
+
+        states = {}
+        for pdf in batches:
+            rows = []
+            for g, it, w in zip(pdf["__g0"], pdf["__item"], pdf["__w"]):
+                key = None if g != g else g
+                states.setdefault(key, TopnState(counters))
+                wv = weight_to_long(w) if weighted else 1
+                if it is not None and wv:
+                    rows.append((key, truncate_key_bytes(it), wv))
+            if runs:
+                totals = {}
+                for key, it, wv in rows:
+                    totals[key, it] = totals.get((key, it), 0) + wv
+                # groups hold separate states, so only the order within
+                # a group matters
+                rows.sort(key=lambda r: (-totals[r[0], r[1]], r[1]))
+            for key, it, wv in rows:
+                states[key].add(it, wv)
+        return {key: st.counts for key, st in states.items()}
+
+    def test_equals_row_replay_in_runs(self):
+        nan = float("nan")
+        batches = [
+            self._batch({
+                1.0: [("h", [1, 2, 1, 1]), (self.LONG_A, [1]), (self.LONG_B, [1, 1]),
+                      ("m", [1, 1]), (None, [5, 5]), ("z", [0.0]), ("neg", [-4.0])]
+                     + [(f"s{i}", [1]) for i in range(6)],
+                nan: [("p", [1, 1]), ("q", [2.5])],
+                3.0: [(None, [1, 1])],  # a group with only NULL items
+            }, 1),
+            self._batch({
+                1.0: [("h", [1, 1, 1]), ("m", [1, 1]), ("zz", [2, -2]), ("w", [nan])]
+                     + [(f"t{i}", [1]) for i in range(5)],
+                nan: [("p", [1]), (None, [1])],
+            }, 2),
+            self._batch({
+                1.0: [("h", [1, 1]), ("m", [1, 0.4])] + [(f"u{i}", [1]) for i in range(5)],
+            }, 3),
+        ]
+        for weighted in (False, True):
+            got = self._partial(batches, 2, weighted)
+            assert got == self._replay(batches, 2, weighted), weighted
+            # NaN group keys fold into one NULL group; NULL-only groups stay
+            assert set(got) == {1.0, None, 3.0} and got[3.0] == {}
+            # the two long items truncate first, then combine
+            assert got[1.0]["x" * 255] == 3
+            # eviction fired, and the run order is what the pin holds:
+            # in file order the same rows give another state
+            assert "s0" not in got[1.0]
+            assert got != self._replay(batches, 2, weighted, runs=False), weighted
+
+    def test_prune_on_a_run_ranks_its_sum(self):
+        """Where a prune fires on the first row of a run, the row replay
+        ranks the new item at that row's count and may evict it; the
+        pre-combine ranks it at the run's sum. That is the reference's
+        MergeTopn of the batch's exact sums (topn.c:955-990), the same
+        merge the phase-2 reducer runs."""
+        batches = [
+            self._batch({"g": [("a", [1] * 5), ("b", [1]), ("c", [1])]}, 1),
+            self._batch({"g": [("x", [1, 1])]}, 2),
+        ]
+        assert self._partial(batches, 1, False) == {"g": {"a": 5, "x": 2}}
+        assert self._replay(batches, 1, False) == {"g": {"a": 5, "b": 1, "x": 1}}
+
+
+class TestPartialFanOut:
+    """A Tier-2 sketch spreads a few-file scan to at most one partial
+    task per ``spark.sql.files.openCostInBytes`` of input; the other
+    ``spread_small_scan`` callers keep ``defaultParallelism``."""
+
+    OPEN_COST = "spark.sql.files.openCostInBytes"
+
+    @pytest.fixture
+    def one_file(self, spark, tmp_path):
+        import os
+
+        path = str(tmp_path / "one")
+        spark.range(5000).selectExpr("id % 7 AS g", "CAST(id % 997 AS STRING) AS item").coalesce(
+            1
+        ).write.parquet(path)
+        size = sum(
+            os.path.getsize(os.path.join(path, f)) for f in os.listdir(path) if f.endswith(".parquet")
+        )
+        return spark.read.parquet(path), size
+
+    @staticmethod
+    def _plan(df):
+        import re
+
+        from postgresql_topn_spark.plans.audit import plan_str
+
+        text = plan_str(df, "simple")
+        return (
+            text.count("MapInPandas"),
+            text.count("FlatMapGroupsInPandas"),
+            [int(n) for n in re.findall(r"RoundRobinPartitioning\((\d+)\)", text)],
+        )
+
+    def test_scan_under_the_floor_runs_one_partial(self, one_file):
+        df, size = one_file
+        assert size < 4 << 20
+        sk = topn_add_agg_sketch(df, ["g"], "item", counters=10)
+        assert self._plan(sk) == (1, 1, [])
+
+    def test_scan_above_the_floor_spreads_by_bytes(self, spark, one_file):
+        import math
+
+        from postgresql_topn_spark.operators.sketch_state import (
+            topn_weighted_agg_sketch,
+        )
+
+        df, size = one_file
+        dp = spark.sparkContext.defaultParallelism
+        prior = spark.conf.get(self.OPEN_COST)
+        spark.conf.set(self.OPEN_COST, str(size // 2 + 1))  # the file is ~2 floors
+        try:
+            want = min(dp, math.ceil(size / (size // 2 + 1)))
+            for sk in (
+                topn_add_agg_sketch(df, ["g"], "item", counters=10),
+                topn_weighted_agg_sketch(df, ["g"], "item", "g", counters=10),
+            ):
+                assert self._plan(sk) == (1, 1, [want] if want > 1 else [])
+        finally:
+            spark.conf.set(self.OPEN_COST, prior)
+
+    def test_no_floor_keeps_default_parallelism(self, spark, one_file):
+        from postgresql_topn_spark.functions.cms import cms_add_agg
+        from postgresql_topn_spark.operators.dedup import spread_small_scan
+
+        df, _ = one_file
+        dp = spark.sparkContext.defaultParallelism
+        want = [dp] if dp > 1 else []
+        assert self._plan(spread_small_scan(df, df))[2] == want
+        assert self._plan(cms_add_agg(df, ["g"], "item"))[2] == want
+
+
 class TestArrowNullCoercion:
     """Regressions for the Arrow->pandas nullable-int64-becomes-float64
     coercion (found by the randomized four-surface test): exactness
@@ -426,25 +601,37 @@ def test_eviction_gate_lanes(spark, sf_dir):
     assert {
         (r["grp"], r["item"]): r["frequency"] for r in lanes["exact_subset"]
     } == exact
-    # non-vacuity: the high-cardinality sketch genuinely undercounts
+    # non-vacuity: the high-cardinality sketch genuinely undercounts.
+    # The partial pre-combines each Arrow batch, and a small lineitem
+    # fits in one batch, where the counters=8 top-8 comes out exact
+    # although eviction fires: 1000-row batches make it undercount.
     from postgresql_topn_spark.functions.sketch import explode_topn
     from postgresql_topn_spark.operators.sketch_state import (
         topn_add_agg_sketch,
     )
 
-    sk = topn_add_agg_sketch(
-        li, [F.col("l_returnflag").alias("grp")], "l_partkey", counters=8
-    )
-    ent = explode_topn(sk, "topn", 8, keep=["grp"], counters=8)
-    pk = li.groupBy(
-        F.col("l_returnflag").alias("grp"),
-        F.col("l_partkey").cast("string").alias("item"),
-    ).agg(F.count(F.lit(1)).alias("c"))
-    under = (
-        ent.join(pk, ["grp", "item"])
-        .where(F.col("frequency") < F.col("c"))
-        .count()
-    )
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(batch_key, None)
+    spark.conf.set(batch_key, "1000")
+    try:
+        sk = topn_add_agg_sketch(
+            li, [F.col("l_returnflag").alias("grp")], "l_partkey", counters=8
+        )
+        ent = explode_topn(sk, "topn", 8, keep=["grp"], counters=8)
+        pk = li.groupBy(
+            F.col("l_returnflag").alias("grp"),
+            F.col("l_partkey").cast("string").alias("item"),
+        ).agg(F.count(F.lit(1)).alias("c"))
+        under = (
+            ent.join(pk, ["grp", "item"])
+            .where(F.col("frequency") < F.col("c"))
+            .count()
+        )
+    finally:
+        if prior is None:
+            spark.conf.unset(batch_key)
+        else:
+            spark.conf.set(batch_key, prior)
     assert under > 0, "eviction never fired — the gate is vacuous"
 
     # ---- union-path lanes (VERDICT r11 item 1) ----
